@@ -1,0 +1,29 @@
+package graft
+
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration.Duration
+
+/** Two independent Spark actions on concurrent action threads — the
+  * two-legged writes (DeltaCurate's index appends, the ANN lifecycle's
+  * append ∥ tombstone delete). Local-mode actions launched from separate
+  * threads genuinely overlap, so the legs pay one job+commit floor
+  * instead of two.
+  */
+object Concurrent {
+
+  /** Runs `a` and `b` concurrently and returns only once BOTH have
+    * finished; then rethrows the first failure (`a`'s before `b`'s, the
+    * other attached as suppressed). Awaiting one leg and rethrowing at
+    * once would leave the other leg running detached, still writing its
+    * table while the caller unwinds.
+    */
+  def both(a: => Unit, b: => Unit): Unit = {
+    val ec = ExecutionContext.global
+    val fa = Future(a)(ec)
+    val fb = Future(b)(ec)
+    val ra = Await.ready(fa, Duration.Inf).value.get
+    val rb = Await.ready(fb, Duration.Inf).value.get
+    for (ea <- ra.failed; eb <- rb.failed) ea.addSuppressed(eb)
+    ra.get; rb.get
+  }
+}

@@ -173,7 +173,8 @@ object Curation {
     */
   def dropNearDups(docs: DataFrame, textCol: String, idCol: String,
       threshold: Double): DataFrame = {
-    val losers = Dedup.nearDupPairs(docs, textCol, idCol, threshold)
+    val losers = Dedup.nearDupPairs(docs, textCol, idCol, threshold,
+      SketchHash.XxHash64)
       .select(col("id_b").as(idCol)).distinct()
     docs.join(losers, Seq(idCol), "left_anti")
   }
@@ -189,7 +190,8 @@ object Curation {
     */
   def dropNearDupClusters(docs: DataFrame, textCol: String, idCol: String,
       threshold: Double): DataFrame = {
-    val losers = Dedup.nearDupClusters(docs, textCol, idCol, threshold)
+    val losers = Dedup.nearDupClusters(docs, textCol, idCol, threshold,
+      SketchHash.XxHash64)
       .filter(col("id") =!= col("component"))
       .select(col("id").as(idCol))
     docs.join(losers, Seq(idCol), "left_anti")
@@ -204,7 +206,8 @@ object Curation {
     */
   def dropNearDupClustersKeepBest(docs: DataFrame, textCol: String,
       idCol: String, threshold: Double, qualityCol: String): DataFrame = {
-    val clusters = Dedup.nearDupClusters(docs, textCol, idCol, threshold)
+    val clusters = Dedup.nearDupClusters(docs, textCol, idCol, threshold,
+      SketchHash.XxHash64)
     val keepers = Dedup.canonicalPerCluster(clusters, docs, idCol,
       qualityCol).select(col("keeper_id").as("id"))
     val losers = clusters.join(keepers, Seq("id"), "left_anti")
@@ -563,7 +566,7 @@ object Curation {
     // stage + an AQE re-optimization round per run
     val pairs = Dedup.nearDupPairsFromShingled(
       deconKeepers.select(col(idCol), col("__sh").as("sh")), idCol,
-      cfg.nearDupThreshold,
+      cfg.nearDupThreshold, SketchHash.XxHash64,
       verifySide = Some(keepers.select(col(idCol), col("__sh").as("sh"))),
       dedupPairs = false, spreadBeforeExpand = false)
     val losers =

@@ -3,6 +3,59 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+/** The hash a text sketch runs under — only what differs between the two
+  * families: the MinHash and band-key kernels, the signature element type
+  * (`bigint` components and band keys vs lowercase hex strings), the
+  * component an empty shingle set gets, and SimHash's per-token hash with
+  * its bit extraction.
+  */
+sealed abstract class SketchHash(
+    private[graft] val minhashKernel: String,
+    private[graft] val bandKernel: String,
+    private[graft] val elemType: String) {
+  /** Signature component of an empty or null shingle set. */
+  private[graft] def emptyComponent: Column
+  /** SimHash per-token hash, computed once per token. */
+  private[graft] def tokenHash(t: Column): Column
+  /** Bit `i` (an int column) of a [[tokenHash]] value, as a 0/1 bigint. */
+  private[graft] def bit(h: Column, i: Column): Column
+}
+
+object SketchHash {
+
+  /** xxhash64 permutations: the fast path, Spark-only. The empty-set
+    * component is Long.MaxValue (the identity of min); SimHash bit i is
+    * bit i of the token's 64-bit hash.
+    */
+  case object XxHash64
+      extends SketchHash("graft_minhash", "graft_lsh_bands", "bigint") {
+    private[graft] def emptyComponent: Column = lit(Long.MaxValue)
+    private[graft] def tokenHash(t: Column): Column = xxhash64(t)
+    // call_function: the Scala shiftright wrapper only takes an Int
+    // shift amount; the SQL function takes an expression
+    private[graft] def bit(h: Column, i: Column): Column =
+      call_function("shiftright", h, i).bitwiseAND(lit(1L))
+  }
+
+  /** md5 permutations: bit-identical in every engine, so the oracle can
+    * replay the sketch. The empty-set component is NULL (DuckDB's
+    * `list_min([])`); SimHash bit i reads hex digit i/4 of the token's
+    * md5, bit 3-(i%4) (MSB-first within the digit).
+    */
+  case object Md5
+      extends SketchHash("graft_minhash_md5", "graft_lsh_bands_md5", "string") {
+    private[graft] def emptyComponent: Column = lit(null).cast("string")
+    private[graft] def tokenHash(t: Column): Column = md5(t)
+    private[graft] def bit(h: Column, i: Column): Column = {
+      val pos = call_function("shiftright", i, lit(2)) + lit(1)
+      val digit = conv(call_function("substring", h, pos, lit(1)), 16, 10)
+        .cast("long")
+      call_function("shiftright", digit, lit(3) - i.bitwiseAND(lit(3)))
+        .bitwiseAND(lit(1L))
+    }
+  }
+}
+
 /** Deduplication operators for training-data pipelines ([EXT], SURVEY.md §7.2
   * step 6): exact, MinHash+LSH, SimHash, n-gram Jaccard.
   *
@@ -24,6 +77,11 @@ import org.apache.spark.sql.functions._
   * (CodegenFallback) inside the codegen'd stage — acceptable for these
   * cheap per-element bodies; see TextAnalysis scaladoc for the rule on
   * what must NOT go inside a lambda.
+  *
+  * Each text-sketch family (MinHash signature, LSH band keys, SimHash) is
+  * ONE operator chain that takes its hash as a [[SketchHash]] argument:
+  * xxhash64 is the fast Spark-only family, md5 the cross-engine one the
+  * DuckDB oracle replays. Both run every operator but the hash.
   */
 object Dedup {
 
@@ -50,6 +108,12 @@ object Dedup {
     * fingerprints already indexed drop entirely. A missing table
     * bootstraps from this increment. Returns the surviving rows of `df`
     * (materialized before the index append, so the result is stable).
+    *
+    * Precondition: `idCol` is unique and non-null within `df` (the
+    * snapshot contract). The keeper is a `min_by` over the id: rows tied
+    * on the minimum id keep an arbitrary one of them, and `min_by`
+    * ignores null ids, so a fingerprint whose ids are all null keeps an
+    * all-null row.
     */
   def incrementalExact(
       df: DataFrame,
@@ -61,18 +125,8 @@ object Dedup {
     require(!df.columns.contains("__fp") && !df.columns.contains("__keep"),
       "input must not already contain __fp/__keep columns")
     val spark = df.sparkSession
-    val withFp = df.withColumn("__fp",
-      TextAnalysis.fingerprint(col(textCol)))
-    // in-increment first occurrence: min-id keeper per fingerprint — ONE
-    // min_by aggregation (optimization r17, guide §2.4: the old
-    // groupBy(min) + self-join paid a second exchange and a sort-merge
-    // join over the same rows for the identical decision). Ids are
-    // unique per increment, so the min_by winner IS the old min-id row;
-    // column order matches the old join output (__fp first).
-    val others = withFp.columns.filter(_ != "__fp")
-    val firsts = withFp.groupBy(col("__fp"))
-      .agg(min_by(struct(others.map(col): _*), col(idCol)).as("__s"))
-      .select(col("__fp") +: others.map(c => col("__s." + c).as(c)): _*)
+    val firsts = keeperRows(
+      df.withColumn("__fp", TextAnalysis.fingerprint(col(textCol))), idCol)
     val fresh =
       if (spark.catalog.tableExists(indexTable)) {
         firsts.join(spark.table(indexTable)
@@ -99,6 +153,23 @@ object Dedup {
       .bucketBy(buckets, "fp").sortBy("fp")
       .saveAsTable(indexTable)
     out.drop("__fp")
+  }
+
+  /** The in-increment exact keeper: the min-`idCol` row per `__fp`, as
+    * ONE `min_by` aggregation — exchange-free over a hash(__fp)-
+    * partitioned frame, where a groupBy(min) + self-join back to the rows
+    * would pay a second exchange and a sort-merge join. Output columns
+    * are `__fp`, then the input's other columns in order. Column names
+    * are quoted into the struct and read back with `getField`, so dotted
+    * names (`meta.src`) pass through. Ids must be unique and non-null
+    * (see [[incrementalExact]]).
+    */
+  private[graft] def keeperRows(df: DataFrame, idCol: String): DataFrame = {
+    def quoted(c: String) = col("`" + c.replace("`", "``") + "`")
+    val others = df.columns.filter(_ != "__fp")
+    df.groupBy(col("__fp"))
+      .agg(min_by(struct(others.map(quoted): _*), quoted(idCol)).as("__s"))
+      .select(col("__fp") +: others.map(c => col("__s").getField(c).as(c)): _*)
   }
 
   /** Incremental NEAR-dup suppression against a persisted signature
@@ -154,8 +225,8 @@ object Dedup {
     // survivor checkpoint below (the incrementalExact rule: appending
     // invalidates dependent caches and a lazy result would recompute
     // against the UPDATED index, dropping everything).
-    val withSig = withMd5Sketch(
-        Similarity.spreadIfNarrow(batch), textCol, k, bands)
+    val withSig = withSketch(
+        Similarity.spreadIfNarrow(batch), textCol, k, bands, SketchHash.Md5)
       .localCheckpoint()
     val batchBands = withSig.select(col(idCol).as("__bid"),
       col("__sig").as("__bsig"), explode(col("__bk")).as("key"))
@@ -220,69 +291,34 @@ object Dedup {
     out.drop("__sig", "__bk")
   }
 
-  /** The md5 sketch block every index writer AND reader shares —
-    * `__sig` (k md5-permutation MinHash components) and `__bk` (banded
-    * keys, NULL for shingle-less docs so they are never candidates and
-    * never indexed) computed from `textCol` in one narrow pass. ONE
-    * definition on purpose (round-9 review finding: DeltaCurate.run,
-    * DeltaCurate.compact, and incrementalNearDupMd5 each restated this
-    * block, so a future tweak to the null-band guard applied to one site
-    * would silently desynchronize the index writers from its readers).
+  /** The sketch block every signature-index writer and reader shares
+    * (DeltaCurate, [[incrementalNearDupMd5]]): `__sig` (k MinHash
+    * components) and `__bk` (banded keys, NULL for shingle-less docs)
+    * computed from `textCol` in one narrow pass, every other column kept.
+    * The persisted indexes use [[SketchHash.Md5]].
     */
-  private[graft] def withMd5Sketch(df: DataFrame, textCol: String,
-      k: Int, bands: Int): DataFrame = {
+  private[graft] def withSketch(df: DataFrame, textCol: String,
+      k: Int, bands: Int, hash: SketchHash): DataFrame =
+    sketched(df.withColumn("__sh",
+        TextAnalysis.shingles(TextAnalysis.tokens(col(textCol)))),
+      "__sh", k, bands, hash).drop("__sh")
+
+  /** Adds `__sig` and `__bk` from the shingle column `shCol` — the ONE
+    * null-band guard. Shingle-less docs (empty or null shingles) get NULL
+    * band keys, so explode/posexplode drops them: they never become
+    * candidates and never enter an index. The coalesce matters: null
+    * text gives size(null) = null, which would slip past `=== 0` and put
+    * every null doc into one degenerate bucket per band.
+    */
+  private def sketched(df: DataFrame, shCol: String, k: Int, bands: Int,
+      hash: SketchHash): DataFrame = {
     require(k % bands == 0, s"k=$k must divide into bands=$bands")
-    df.withColumn("__sh",
-        TextAnalysis.shingles(TextAnalysis.tokens(col(textCol))))
-      .withColumn("__sig", minhashSignatureMd5(col("__sh"), k))
+    df.withColumn("__sig", minhashSignature(col(shCol), k, hash))
       .withColumn("__bk",
-        when(coalesce(size(col("__sh")), lit(0)) === 0,
-          lit(null).cast("array<string>"))
-          .otherwise(lshBandKeysMd5(col("__sig"), bands, k / bands)))
-      .drop("__sh")
+        when(coalesce(size(col(shCol)), lit(0)) === 0,
+          lit(null).cast(s"array<${hash.elemType}>"))
+          .otherwise(lshBandKeys(col("__sig"), bands, k / bands, hash)))
   }
-
-  /** md5-permutation MinHash signature (array<string>): component `i` is
-    * the minimum md5 over `"i " + shingle` — the cross-engine-replayable
-    * variant of [[minhashSignature]] (hex strings compare identically
-    * everywhere). Empty/null shingle sets yield null components; callers
-    * null the band keys for those rows (see [[incrementalNearDupMd5]]).
-    */
-  def minhashSignatureMd5(shingleCol: Column, k: Int): Column =
-    org.apache.spark.sql.SparkSession.getActiveSession match {
-      case Some(s) =>
-        // one-pass codegen kernel, bit-identical to the HOF fallback
-        // (TextAnalysisSpec parity pin); the coalesce completes the
-        // null-array case — the HOF yields k null components there
-        graft.plans.GraftFunctions.register(s)
-        coalesce(call_function("graft_minhash_md5", shingleCol, lit(k)),
-          array((0 until k).map(_ => lit(null).cast("string")): _*))
-      case None =>
-        transform(
-          sequence(lit(0), lit(k - 1)),
-          i => array_min(transform(shingleCol,
-            s => md5(concat(i.cast("string"), lit(" "), s)))))
-    }
-
-  /** Band keys with the band id baked into the hash (array<string>):
-    * `md5(band || "|" || joined components)` — one string key per band,
-    * so downstream joins/indexes need no (band, key) composite.
-    */
-  def lshBandKeysMd5(sig: Column, bands: Int, rowsPerBand: Int): Column =
-    org.apache.spark.sql.SparkSession.getActiveSession match {
-      case Some(s) =>
-        // codegen kernel, bit-identical to the HOF fallback (parity
-        // spec); NULL signatures stay NULL — callers null band keys for
-        // shingle-less docs before this runs
-        graft.plans.GraftFunctions.register(s)
-        call_function("graft_lsh_bands_md5", sig, lit(bands),
-          lit(rowsPerBand))
-      case None =>
-        transform(
-          sequence(lit(0), lit(bands - 1)),
-          b => md5(concat(b.cast("string"), lit("|"),
-            concat_ws(",", slice(sig, b * rowsPerBand + 1, lit(rowsPerBand))))))
-    }
 
   /** Winnowing fingerprints (Schleimer, Wilkerson & Aiken 2003) — the
     * local document-fingerprinting scheme behind MOSS-style plagiarism
@@ -380,54 +416,41 @@ object Dedup {
   // MinHash + LSH
   // ------------------------------------------------------------------
 
-  /** k-permutation MinHash signature over a shingle array.
-    * Permutation i is xxhash64(shingle, i) — deterministic, seedable, and
-    * evaluated entirely in codegen (no UDF). Empty shingle sets fall back to
-    * an all-Long.MaxValue signature; `minhashed` nulls their band keys so
-    * short docs never enter LSH buckets (they would otherwise all share one
-    * degenerate bucket and explode O(m²) false candidates).
+  /** k-permutation MinHash signature over a shingle array, in one
+    * codegen pass. Component i is the minimum over the shingles of
+    *  - xxhash64(shingle, i) for [[SketchHash.XxHash64]] (the kernel
+    *    hashes each shingle's bytes once and derives the k components by
+    *    int-mixes), or
+    *  - md5("i " + shingle) as a hex string for [[SketchHash.Md5]].
+    * Empty and null shingle sets yield the hash's empty component in
+    * every slot (Long.MaxValue or NULL); [[sketched]] nulls their band
+    * keys so short docs never enter LSH buckets (they would otherwise all
+    * share one degenerate bucket and explode O(m²) false candidates).
+    * TextAnalysisSpec pins both kernels against their HOF definitions.
     */
-  def minhashSignature(shingleCol: Column, k: Int = 32): Column =
-    org.apache.spark.sql.SparkSession.getActiveSession match {
-      case Some(s) =>
-        // one-pass codegen kernel: each shingle's bytes hash ONCE, the k
-        // components derive via k int-mixes (the HOF form re-hashes the
-        // bytes k times, interpreted). Bit-identical to the fallback —
-        // TextAnalysisSpec pins the parity. The coalesce completes the
-        // null-array case (HOF yields the all-MaxValue signature there).
-        graft.plans.GraftFunctions.register(s)
-        coalesce(call_function("graft_minhash", shingleCol, lit(k)),
-          array((0 until k).map(_ => lit(Long.MaxValue)): _*))
-      case None =>
-        transform(
-          sequence(lit(0), lit(k - 1)),
-          i =>
-            coalesce(
-              array_min(transform(shingleCol, s => xxhash64(s, i))),
-              lit(Long.MaxValue)))
-    }
+  def minhashSignature(shingleCol: Column, k: Int, hash: SketchHash): Column = {
+    graft.plans.GraftFunctions.register(
+      org.apache.spark.sql.SparkSession.active)
+    // the kernels return NULL for a NULL array; the coalesce completes it
+    coalesce(call_function(hash.minhashKernel, shingleCol, lit(k)),
+      array(Seq.fill(k)(hash.emptyComponent): _*))
+  }
 
-  /** LSH band keys: signature split into `bands` rows of `rowsPerBand`,
-    * each band hashed to one long. Docs sharing any band key are candidates.
+  /** LSH band keys: the signature split into `bands` rows of `rowsPerBand`,
+    * each band hashed to one key with the band id mixed in (xxhash64 seed
+    * or `md5(band || "|" || components)`), so downstream joins and indexes
+    * need no (band, key) composite. Docs sharing any key are candidates.
+    * NULL signatures stay NULL.
     */
-  def lshBandKeys(sig: Column, bands: Int, rowsPerBand: Int): Column =
-    org.apache.spark.sql.SparkSession.getActiveSession match {
-      case Some(s) =>
-        // codegen kernel, bit-identical to the HOF fallback (parity
-        // spec); NULL signatures stay NULL — minhashSignature's output
-        // is never null, and callers null band keys explicitly for
-        // shingle-less docs
-        graft.plans.GraftFunctions.register(s)
-        call_function("graft_lsh_bands", sig, lit(bands), lit(rowsPerBand))
-      case None =>
-        transform(
-          sequence(lit(0), lit(bands - 1)),
-          b => xxhash64(concat_ws(",",
-            slice(sig, b * rowsPerBand + 1, lit(rowsPerBand))), b))
-    }
+  def lshBandKeys(sig: Column, bands: Int, rowsPerBand: Int,
+      hash: SketchHash): Column = {
+    graft.plans.GraftFunctions.register(
+      org.apache.spark.sql.SparkSession.active)
+    call_function(hash.bandKernel, sig, lit(bands), lit(rowsPerBand))
+  }
 
   /** Per-doc signature + band keys (the shuffle-free stage). The input is
-    * spread first: the signature fold is an interpreted HOF, and a
+    * spread first: tokenize, shingle and sign are per-row compute, and a
     * single-file scan would otherwise pay the whole corpus in one task
     * (see TextAnalysis scaladoc; on a real multi-file layout the spread
     * is the identity).
@@ -436,13 +459,14 @@ object Dedup {
       df: DataFrame,
       textCol: String,
       idCol: String,
+      hash: SketchHash,
       k: Int = 32,
       bands: Int = 8): DataFrame = {
     val toks = TextAnalysis.tokens(col(textCol))
     minhashedFromShingles(
       Similarity.spreadIfNarrow(df)
         .select(col(idCol), TextAnalysis.shingles(toks).as("__sh")),
-      "__sh", idCol, k, bands)
+      "__sh", idCol, hash, k, bands)
   }
 
   /** [[minhashed]] over a precomputed shingle column — lets callers that
@@ -453,25 +477,12 @@ object Dedup {
       df: DataFrame,
       shCol: String,
       idCol: String,
+      hash: SketchHash,
       k: Int = 32,
-      bands: Int = 8): DataFrame = {
-    require(k % bands == 0, s"k=$k must divide into bands=$bands")
-    val sh = col(shCol)
-    df.select(
-      col(idCol),
-      size(sh).as("__n_shingles"),
-      minhashSignature(sh, k).as("minhash_sig"))
-      .withColumn("band_keys",
-        // shingle-less docs get NULL band keys: posexplode drops them, so
-        // they can never congregate in one spurious bucket. coalesce: null
-        // text ⇒ size(null) = null, which would slip past `=== 0` and give
-        // every null doc the same all-MaxValue signature (one degenerate
-        // bucket per band).
-        when(coalesce(col("__n_shingles"), lit(0)) === 0,
-          lit(null).cast("array<bigint>"))
-          .otherwise(lshBandKeys(col("minhash_sig"), bands, k / bands)))
-      .drop("__n_shingles")
-  }
+      bands: Int = 8): DataFrame =
+    sketched(df.select(col(idCol), col(shCol)), shCol, k, bands, hash)
+      .select(col(idCol), col("__sig").as("minhash_sig"),
+        col("__bk").as("band_keys"))
 
   /** Same-bucket candidate pairs (id_a < id_b), deduped across bands.
     * `maxBucketSize` drops degenerate buckets before the pair expansion —
@@ -493,15 +504,15 @@ object Dedup {
     * candidates when this shape was first considered. Upstream
     * signature/sketch compute is consumed exactly ONCE (the aggregate's
     * map side), so nothing needs caching.
-    */
-  /** `dedupPairs = false` skips the cross-band distinct — for consumers
+    *
+    * `dedupPairs = false` skips the cross-band distinct — for consumers
     * that tolerate (or re-collapse) the ≤ `bands`-way duplicate a pair
     * shared by several bands produces: the transitive paths feed
     * [[ConnectedComponents.run]], whose own edge-canonicalization distinct
     * subsumes it, so the pair-level exchange is pure extra wall there.
     * Callers that EMIT pairs (q_neardup_pairs et al.) keep the default.
-    */
-  /** `spreadBeforeExpand = false` skips the pre-expansion repartition —
+    *
+    * `spreadBeforeExpand = false` skips the pre-expansion repartition —
     * for pipelines whose bucket population is known-sparse (curate's
     * keeper shingle buckets: a few hundred verified pairs), where the
     * generator's output fits one task trivially and the exchange is a
@@ -606,6 +617,7 @@ object Dedup {
       textCol: String,
       idCol: String,
       threshold: Double,
+      hash: SketchHash,
       k: Int = 32,
       bands: Int = 8): DataFrame = {
     val shingled = Similarity.spreadIfNarrow(df)
@@ -613,7 +625,7 @@ object Dedup {
         col(idCol),
         TextAnalysis.shingles(TextAnalysis.tokens(col(textCol))).as("sh"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    nearDupPairsFromShingled(shingled, idCol, threshold, k, bands)
+    nearDupPairsFromShingled(shingled, idCol, threshold, hash, k, bands)
   }
 
   /** [[nearDupPairs]] over a precomputed `(idCol, sh)` shingle frame — for
@@ -638,13 +650,14 @@ object Dedup {
       shingled: DataFrame,
       idCol: String,
       threshold: Double,
+      hash: SketchHash,
       k: Int = 32,
       bands: Int = 8,
       verifySide: Option[DataFrame] = None,
       dedupPairs: Boolean = true,
       spreadBeforeExpand: Boolean = true): DataFrame = {
     val pairs = lshCandidatePairs(
-      minhashedFromShingles(shingled, "sh", idCol, k, bands), idCol,
+      minhashedFromShingles(shingled, "sh", idCol, hash, k, bands), idCol,
       dedupPairs = dedupPairs, spreadBeforeExpand = spreadBeforeExpand)
     // both verify sides join the IDENTICAL projection (aliased, keyed via
     // the join condition) rather than two side-renamed copies, so the two
@@ -674,10 +687,12 @@ object Dedup {
       textCol: String,
       idCol: String,
       threshold: Double,
+      hash: SketchHash,
       k: Int = 32,
       bands: Int = 8): DataFrame =
     ConnectedComponents.run(
-      nearDupPairs(df, textCol, idCol, threshold, k, bands), "id_a", "id_b")
+      nearDupPairs(df, textCol, idCol, threshold, hash, k, bands),
+      "id_a", "id_b")
 
   /** Quality-aware canonical selection: one keeper per near-dup cluster,
     * chosen by highest quality with ascending-id tie-break — the policy a
@@ -727,31 +742,34 @@ object Dedup {
   // SimHash
   // ------------------------------------------------------------------
 
-  /** 64-bit SimHash of a token array: per-token xxhash64, ±1 vote per bit,
-    * sign of each bit-total becomes the output bit. Pure array expressions
-    * (the 64-counter fold is a per-row `aggregate`, no shuffle); a custom
-    * codegen Expression is the upgrade path if profiles demand.
+  /** `nBits`-bit SimHash of a token array: each token hashes ONCE, votes
+    * ±1 on each of the first nBits bits of its hash ([[SketchHash.bit]]),
+    * and bit i of the signature is set iff its vote total is strictly
+    * positive. [[SketchHash.XxHash64]] with 64 bits is the fast path
+    * (streaming near-dup); [[SketchHash.Md5]] with 16 bits is the
+    * cross-engine form the oracle replays. Pure array expressions (the
+    * counter fold is a per-row `aggregate`, no shuffle). Null token
+    * arrays give a null signature; empty ones pack 0.
     */
-  def simhash(toks: Column): Column = {
-    // call_function: the Scala shiftleft/shiftright wrappers only take Int
-    // shift amounts; the SQL functions take expressions.
+  def simhash(toks: Column, nBits: Int, hash: SketchHash): Column = {
+    // one packed long: bit indices above 63 would WRAP (Java shift mod
+    // 64) and silently alias low bits with carry corruption
+    require(nBits >= 1 && nBits <= 64,
+      s"nBits must be in [1, 64], got $nBits")
+    val bitIdx = sequence(lit(0), lit(nBits - 1))
     val votes = aggregate(
-      toks,
-      array_repeat(lit(0L), 64),
-      (acc, t) =>
+      transform(toks, t => hash.tokenHash(t)),
+      array_repeat(lit(0L), nBits),
+      (acc, h) =>
         zip_with(
           acc,
-          transform(
-            sequence(lit(0), lit(63)),
-            i => when(call_function("shiftright", xxhash64(t), i)
-              .bitwiseAND(lit(1L)) === 1, lit(1L)).otherwise(lit(-1L))),
+          transform(bitIdx,
+            i => when(hash.bit(h, i) === 1L, lit(1L)).otherwise(lit(-1L))),
           (a, v) => a + v))
-    // `votes` is referenced exactly once (zip_with), so the expensive token
-    // fold is not duplicated per bit.
+    // `votes` is referenced exactly once (zip_with), so the token fold is
+    // not duplicated per bit
     aggregate(
-      zip_with(
-        votes,
-        sequence(lit(0), lit(63)),
+      zip_with(votes, bitIdx,
         (v, i) => when(v > 0, call_function("shiftleft", lit(1L), i))
           .otherwise(lit(0L))),
       lit(0L),
@@ -760,50 +778,4 @@ object Dedup {
 
   /** Hamming distance between two 64-bit signatures. */
   def hamming(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
-
-  /** ORACLE-friendly SimHash: per-token bits come from md5 hex digits
-    * (md5 is bit-identical in every engine, so the packed signature
-    * hash-compares against a DuckDB reimplementation — same trick as the
-    * md5 MinHash permutations in q_minhash_md5). 16 bits by default; the
-    * 64-bit xxhash64 `simhash` stays the fast path. Bit i of the
-    * signature reads hex digit i/4, bit 3-(i%4) (MSB-first within the
-    * digit); votes are the standard ±1 fold with a strictly-positive
-    * threshold. Tokens hash ONCE in the outer transform — the 16 bit
-    * lambdas reference the lambda variable, not 16 copies of md5(t).
-    * Null token arrays propagate to a null signature; empty ones pack 0.
-    */
-  def simhashMd5(toks: Column, nBits: Int = 16): Column = {
-    // one packed long: bit indices above 63 would WRAP (Java shift mod
-    // 64) and silently alias low bits with carry corruption
-    require(nBits >= 1 && nBits <= 64,
-      s"nBits must be in [1, 64], got $nBits")
-    val hashes = transform(toks, t => md5(t))
-    val votes = aggregate(
-      hashes,
-      array_repeat(lit(0L), nBits),
-      (acc, h) =>
-        zip_with(
-          acc,
-          transform(
-            sequence(lit(0), lit(nBits - 1)),
-            i => {
-              val pos = call_function("shiftright", i, lit(2)) + lit(1)
-              val within = lit(3) - i.bitwiseAND(lit(3))
-              val digit =
-                conv(call_function("substring", h, pos, lit(1)), 16, 10)
-                  .cast("long")
-              val bit = call_function("shiftright", digit, within)
-                .bitwiseAND(lit(1L))
-              when(bit === 1L, lit(1L)).otherwise(lit(-1L))
-            }),
-          (a, v) => a + v))
-    aggregate(
-      zip_with(
-        votes,
-        sequence(lit(0), lit(nBits - 1)),
-        (v, i) => when(v > 0, call_function("shiftleft", lit(1L), i))
-          .otherwise(lit(0L))),
-      lit(0L),
-      (acc, b) => acc + b)
-  }
 }

@@ -504,38 +504,6 @@ object Similarity {
       .filter(col("sim4") >= threshold)
   }
 
-  /** [[annLsh]] with md5-derived hyperplanes and round-4 cosine scoring —
-    * the HASH-ORACLED variant of the full ANN chain. Every stage is
-    * cross-engine deterministic: the bucket is the q_lsh_bucket_md5
-    * sketch, candidates are same-bucket pairs under the same
-    * `maxBucketSize` cap, verification is `round(cos, 4)`, and the
-    * top-k election orders (sim4 DESC, id ASC) — so DuckDB replays the
-    * candidate → verify → top-k chain bit-identically, closing the
-    * quality gap the xxhash64 fast path (rows-only by nature) leaves to
-    * recall floors. Returns (q_id, n_id, sim4, rn), rn ≤ k.
-    */
-  /** IVF ANN with a fully DETERMINISTIC, cross-engine-replayable chain
-    * ([EXT]) — the md5 sibling of [[annIvf]], mirroring [[annLshMd5]]:
-    * centroids are the md5-seeded k-means fit (the oracled q_kmeans
-    * fit — Clustering.kmeansFit), each vector is assigned to its argmax
-    * cell (cosine rounded to 6 decimals, cell-id tie-break), each QUERY
-    * probes its top-`nProbe` cells in the same rounded order, candidates
-    * are the probed cells' members (each point lives in exactly one
-    * cell, so no candidate dedup is needed), verification is the exact
-    * cosine rounded to 4, top-k by (sim4 DESC, id ASC). Every stage is
-    * a pure function of the input — DuckDB replays fit, assignment,
-    * probe order, and verify bit-identically, so the WHOLE chain is
-    * hash-oracled (q_ann_ivf_md5), unlike the salted xxhash [[annIvf]]
-    * scale path which stays rows-only + recall-floored.
-    *
-    * Scale shape: the fit is the k·dim literal-table pass (corpus never
-    * shuffles); assignment/probing are narrow kernel passes; the
-    * candidate join is cell-keyed with `maxCellSize` failing closed on
-    * degenerate fits — against the fitted directory (`fittedCellCounts`,
-    * one memoized histogram pass at fit time) the gate is a driver-side
-    * isin filter, otherwise an inline count + broadcast join. At extreme
-    * per-cell skew prefer [[annIvf]]'s salted join.
-    */
   /** The IVF index's inverted-list DIRECTORY: per-cell member counts under
     * the given centroids — the other half of a real IVF index alongside
     * the centroid table (list sizes are what a probe planner consults).
@@ -560,6 +528,28 @@ object Similarity {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
   }
 
+  /** IVF ANN with a fully DETERMINISTIC, cross-engine-replayable chain
+    * ([EXT]) — the md5 sibling of [[annIvf]], mirroring [[annLshMd5]]:
+    * centroids are the md5-seeded k-means fit (the oracled q_kmeans
+    * fit — Clustering.kmeansFit), each vector is assigned to its argmax
+    * cell (cosine rounded to 6 decimals, cell-id tie-break), each QUERY
+    * probes its top-`nProbe` cells in the same rounded order, candidates
+    * are the probed cells' members (each point lives in exactly one
+    * cell, so no candidate dedup is needed), verification is the exact
+    * cosine rounded to 4, top-k by (sim4 DESC, id ASC). Every stage is
+    * a pure function of the input — DuckDB replays fit, assignment,
+    * probe order, and verify bit-identically, so the WHOLE chain is
+    * hash-oracled (q_ann_ivf_md5), unlike the salted xxhash [[annIvf]]
+    * scale path which stays rows-only + recall-floored.
+    *
+    * Scale shape: the fit is the k·dim literal-table pass (corpus never
+    * shuffles); assignment/probing are narrow kernel passes; the
+    * candidate join is cell-keyed with `maxCellSize` failing closed on
+    * degenerate fits — against the fitted directory (`fittedCellCounts`,
+    * one memoized histogram pass at fit time) the gate is a driver-side
+    * isin filter, otherwise an inline count + broadcast join. At extreme
+    * per-cell skew prefer [[annIvf]]'s salted join.
+    */
   def annIvfMd5(
       df: DataFrame,
       idCol: String,
@@ -643,6 +633,16 @@ object Similarity {
     topKPerQuery(verified, k)
   }
 
+  /** [[annLsh]] with md5-derived hyperplanes and round-4 cosine scoring —
+    * the HASH-ORACLED variant of the full ANN chain. Every stage is
+    * cross-engine deterministic: the bucket is the q_lsh_bucket_md5
+    * sketch, candidates are same-bucket pairs under the same
+    * `maxBucketSize` cap, verification is `round(cos, 4)`, and the
+    * top-k election orders (sim4 DESC, id ASC) — so DuckDB replays the
+    * candidate → verify → top-k chain bit-identically, closing the
+    * quality gap the xxhash64 fast path (rows-only by nature) leaves to
+    * recall floors. Returns (q_id, n_id, sim4, rn), rn ≤ k.
+    */
   def annLshMd5(
       df: DataFrame,
       idCol: String,

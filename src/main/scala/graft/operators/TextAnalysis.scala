@@ -243,29 +243,16 @@ object TextAnalysis {
           x === lit("") || array_position(lines, x) === i + 1), sep))
   }
 
-  /** Rolling polynomial hash over the token stream (base-31 over xxhash64 of
-    * each token, mod 1e9+7) — order-sensitive unlike the md5 fingerprint, so
-    * documents that permute the same tokens fingerprint differently.
-    * Left-to-right `aggregate` keeps it deterministic on any cluster size
-    * (the fold is per-row, not across partitions); the modulus keeps every
-    * intermediate below 2^35 so ANSI mode (Spark 4 default) never sees a
-    * long overflow.
+  /** Rolling polynomial hash over the token stream: a base-31 left fold,
+    * mod 1e9+7, of each token's hash — the first 8 hex digits of its md5
+    * (engine-portable, so DuckDB replays the fold with list_reduce over
+    * the same prefixes). Order-sensitive, unlike the md5 fingerprint, so
+    * documents that permute the same tokens fingerprint differently. The
+    * fold is per row, so it is deterministic on any cluster size, and
+    * intermediates stay below 31·(1e9+7)+2^32 < 2^35, so ANSI mode (Spark
+    * 4 default) never sees a long overflow.
     */
   def rollingHash(toks: Column): Column = {
-    val p = lit(1000000007L)
-    aggregate(toks, lit(0L),
-      (acc, t) => pmod(acc * lit(31L) + pmod(xxhash64(t), p), p))
-  }
-
-  /** Cross-engine twin of [[rollingHash]]: same base-31 mod-1e9+7 fold, but
-    * the per-token hash is the first 8 hex digits of md5 (engine-portable)
-    * instead of xxhash64 (Spark-only). Exists so an independent engine can
-    * oracle the order-sensitive fold itself (DuckDB: list_reduce over the
-    * same md5 prefixes); production callers should prefer [[rollingHash]],
-    * which skips the md5 + hex-decode detour. Intermediates stay below
-    * 31·(1e9+7)+2^32 < 2^35, so ANSI mode never sees an overflow.
-    */
-  def rollingHashMd5(toks: Column): Column = {
     val p = lit(1000000007L)
     aggregate(toks, lit(0L),
       (acc, t) => pmod(acc * lit(31L) +

@@ -3,7 +3,8 @@ package graft.processes
 import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Curation, Dedup, SnapshotDiff, TextAnalysis}
+import graft.operators.{Curation, Dedup, SketchHash, SnapshotDiff,
+  TextAnalysis}
 
 /** Incremental snapshot curation ([EXT]) — the monthly-delta shape: when a
   * new corpus snapshot lands, do NOT re-curate the world; diff it against
@@ -198,13 +199,13 @@ object DeltaCurate {
     // without a fresh exchange (md5 fingerprints are uniform — no skew
     // risk), where the round-robin spread forced each consumer to
     // re-shuffle. Also skips round-robin's sort-before-repartition pass.
-    val sketched = Dedup.withMd5Sketch(
+    val sketched = Dedup.withSketch(
       {
         val fp = gated.withColumn("__fp",
           TextAnalysis.fingerprint(col(textCol)))
         if (spreadNeeded) fp.repartition(par, col("__fp")) else fp
       },
-      textCol, k, bands)
+      textCol, k, bands, SketchHash.Md5)
     // table existence BEFORE either append mutates the catalog (and
     // before the first action, so the bootstrap shape below can fuse)
     val fpExists = spark.catalog.tableExists(fpIndexTable)
@@ -215,14 +216,17 @@ object DeltaCurate {
     // semi-join — both index branches are statically absent) and the
     // near-dup drop set is statically empty, so the base checkpoint and
     // the flagged checkpoint collapse into ONE keeper materialization:
-    // flagged ≡ keepers + a null __nd column (the empty left join's
-    // exact output, column order included). The observe metrics ride
-    // this single action; the AQE-exclusion window covers it.
+    // flagged ≡ keepers + a null __nd column — the empty left join's
+    // rows, but NOT its column order: keeperRows puts __fp first, the
+    // USING join below puts idCol first. The appends select by name;
+    // the returned survivors keep the input's order at bootstrap and
+    // lead with idCol afterwards. The observe metrics ride this single
+    // action; the AQE-exclusion window covers it.
     val bootstrapFused = !fpExists && !sigExists
     val checkpointed =
       try {
         if (bootstrapFused)
-          keeperRows(sketched, idCol)
+          Dedup.keeperRows(sketched, idCol)
             .withColumn("__nd", lit(null).cast("boolean"))
             .localCheckpoint()
         else sketched.localCheckpoint()
@@ -234,13 +238,9 @@ object DeltaCurate {
       }
     val flagged = if (bootstrapFused) checkpointed else {
     val base = checkpointed
-    // in-increment exact keeper: min-id copy per fingerprint — ONE min_by
-    // aggregation instead of the old groupBy(min) + self-join
-    // (optimization r17, guide §2.4: the join was a second exchange +
-    // sort over the same rows for the identical decision), exchange-free
-    // over the hash(__fp) checkpoint blocks. Ids are unique per
-    // increment, so the min_by winner is exactly the old min-id row.
-    val firsts = keeperRows(base, idCol)
+    // in-increment exact keeper: min-id copy per fingerprint,
+    // exchange-free over the hash(__fp) checkpoint blocks
+    val firsts = Dedup.keeperRows(base, idCol)
     // one-sided anti-join: the bucketed index scan satisfies the join's
     // distribution, only the (small) delta side shuffles. exactFresh
     // lands twice in the flagged-checkpoint action (the flagged left
@@ -332,26 +332,18 @@ object DeltaCurate {
     // real scale. Write parallelism becomes `buckets` — which is already
     // the index's scale knob (more data ⇒ more buckets).
     val survivors = flagged.filter(col("__nd").isNull)
-    val ec = scala.concurrent.ExecutionContext.global
-    val fpWrite = scala.concurrent.Future {
+    graft.Concurrent.both(
       flagged.select(col("__fp").as("fp"))
         .repartition(buckets, col("fp"))
         .write.mode(if (fpExists) "append" else "overwrite")
         .bucketBy(buckets, "fp").sortBy("fp")
-        .saveAsTable(fpIndexTable)
-    }(ec)
-    val sigWrite = scala.concurrent.Future {
+        .saveAsTable(fpIndexTable),
       survivors.select(explode(col("__bk")).as("key"), col(idCol).as("id"),
           col("__sig").as("sig"))
         .repartition(buckets, col("key"))
         .write.mode(if (sigExists) "append" else "overwrite")
         .bucketBy(buckets, "key").sortBy("key")
-        .saveAsTable(sigIndexTable)
-    }(ec)
-    scala.concurrent.Await.result(fpWrite,
-      scala.concurrent.duration.Duration.Inf)
-    scala.concurrent.Await.result(sigWrite,
-      scala.concurrent.duration.Duration.Inf)
+        .saveAsTable(sigIndexTable))
     // the checkpoints above have run, so the observation results are in.
     // A MISSING key (empty metric map) means the CollectMetrics nodes
     // were optimized out of the executed plan anyway — seen when a
@@ -375,22 +367,6 @@ object DeltaCurate {
       removed = metric(sm, "removed"),
       gated = metric(gatedObs.get, "n"),
       survivors = survivors.drop("__fp", "__sig", "__bk", "__nd"))
-  }
-
-  /** The in-increment exact keeper — the min-`idCol` row per `__fp` — as
-    * ONE `min_by` aggregation (optimization r17, guide §2.4). The previous
-    * form (groupBy(min) + self-join back to the rows) paid a second
-    * exchange and a sort-merge join for the identical decision; over a
-    * hash(__fp)-partitioned checkpoint this aggregation is exchange-free.
-    * Column order matches the old join output (`__fp` first, then the
-    * input's other columns). Ids are unique per increment (the snapshot
-    * contract), so the winner is exactly the old min-id row.
-    */
-  private def keeperRows(base: DataFrame, idCol: String): DataFrame = {
-    val others = base.columns.filter(_ != "__fp")
-    base.groupBy(col("__fp"))
-      .agg(min_by(struct(others.map(col): _*), col(idCol)).as("__s"))
-      .select(col("__fp") +: others.map(c => col("__s." + c).as(c)): _*)
   }
 
   /** In-memory index frames equivalent to what a BOOTSTRAP increment of
@@ -463,14 +439,14 @@ object DeltaCurate {
     // keep semi-joins are exchange-free on the fp side over these
     // blocks). Strictly fewer rows than base —
     // increment-proportional at 100 TB.
-    val firsts = keeperRows(
-        Dedup.withMd5Sketch(
+    val firsts = Dedup.keeperRows(
+        Dedup.withSketch(
             {
               val fp = gated.withColumn("__fp",
                 TextAnalysis.fingerprint(col(textCol)))
               if (spreadNeeded) fp.repartition(par, col("__fp")) else fp
             },
-            textCol, k, bands)
+            textCol, k, bands, SketchHash.Md5)
           .select(col(idCol), col("__fp"), col("__sig"), col("__bk")),
         idCol)
       .select(col(idCol), col("__fp"), col("__sig"), col("__bk"))
@@ -555,15 +531,15 @@ object DeltaCurate {
       else gated0
     // same single sketch pass + hash(__fp) checkpoint + min_by keeper as
     // run() (the minhash HOF tree must never inline into a join filter)
-    val base = Dedup.withMd5Sketch(
+    val base = Dedup.withSketch(
         {
           val fp = gated.withColumn("__fp",
             TextAnalysis.fingerprint(col(textCol)))
           if (spreadNeeded) fp.repartition(par, col("__fp")) else fp
         },
-        textCol, k, bands)
+        textCol, k, bands, SketchHash.Md5)
       .localCheckpoint()
-    val firsts = keeperRows(base, idCol)
+    val firsts = Dedup.keeperRows(base, idCol)
     val exactFresh = fpIndex match {
       case Some(fi) =>
         firsts.join(fi.select(col("fp").as("__fp")), Seq("__fp"), "left_anti")
@@ -709,7 +685,7 @@ object DeltaCurate {
     val spread =
       if (corpus.rdd.getNumPartitions < par) fp.repartition(par, col("__fp"))
       else fp
-    Dedup.withMd5Sketch(spread, textCol, k, bands)
+    Dedup.withSketch(spread, textCol, k, bands, SketchHash.Md5)
       .select(col(idCol), col("__fp"), col("__sig"), col("__bk"))
       .localCheckpoint()
   }

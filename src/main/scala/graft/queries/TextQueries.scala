@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Dedup, TextAnalysis => TA}
+import graft.operators.SketchHash.{Md5, XxHash64}
 import graft.sources.Tables
 
 /** Text-analysis + dedup queries over the `documents` fixture ([EXT]).
@@ -344,7 +345,7 @@ object TextQueries {
     // Rows-only (no SQL oracle): MinHash signatures + LSH band keys, the
     // shuffle-free stage of near-dup detection.
     "q_minhash_lsh" -> ((s, dir) =>
-      Dedup.minhashed(t(s, dir, "documents"), "text", "doc_id")
+      Dedup.minhashed(t(s, dir, "documents"), "text", "doc_id", XxHash64)
         .select(col("doc_id"),
           element_at(col("minhash_sig"), 1).as("sig0"),
           element_at(col("band_keys"), 1).as("band0"),
@@ -393,24 +394,23 @@ object TextQueries {
           round(avg(size(toks)), 4).as("avg_tokens"))
     }),
 
-    // ORACLED MinHash: md5-based permutations (md5 is bit-identical across
-    // engines, so the signature itself hash-compares — the xxhash64
-    // variant in q_minhash_lsh stays the fast path; this one proves the
-    // min-over-permuted-shingles semantics end to end).
+    // ORACLED MinHash: Dedup.minhashSignature under md5 (bit-identical
+    // across engines, so the signature itself hash-compares — the
+    // xxhash64 family in q_minhash_lsh is the fast path; this one proves
+    // the min-over-permuted-shingles semantics end to end).
     "q_minhash_md5" -> ((s, dir) => {
-      val sh = TA.shingles(toks)
-      val sig = (i: Int) =>
-        array_min(transform(col("s"), x => md5(concat(lit(s"$i "), x))))
-          .as(s"sig$i")
       // compute-heavy narrow map (shingling + 4 md5 per shingle): spread
       // the single-file scan across cores BEFORE any of it runs. No
       // shingle-count filter: a pre-sig filter gets predicate-pushed below
       // the exchange and recomputes the whole shingle expression on the
       // unspread side (observed 30x slower); shingle-less docs simply
-      // yield NULL sigs — array_min(empty) and DuckDB list_min([]) agree.
+      // yield NULL sigs — the md5 empty component and DuckDB list_min([])
+      // agree.
       graft.operators.Similarity.spreadIfNarrow(t(s, dir, "documents"))
-        .select(col("doc_id"), sh.as("s"))
-        .select(col("doc_id"), sig(0), sig(1), sig(2), sig(3))
+        .select(col("doc_id"),
+          Dedup.minhashSignature(TA.shingles(toks), 4, Md5).as("s"))
+        .select(col("doc_id") +:
+          (0 until 4).map(i => element_at(col("s"), i + 1).as(s"sig$i")): _*)
     }),
 
     // ORACLED token-budget mixture: the mixture a training run actually
@@ -635,26 +635,24 @@ object TextQueries {
 
     // ORACLED SimHash: md5-hex-digit bits (cross-engine identical) packed
     // into a 16-bit signature — proves the vote-and-threshold fold end to
-    // end; the 64-bit xxhash64 form in q_text_signatures stays the fast
+    // end; the same fold under 64-bit xxhash64 is the streaming fast
     // path. Compute-heavy narrow map ⇒ spread the single-file scan first.
     "q_simhash_md5" -> ((s, dir) => {
       graft.operators.Similarity.spreadIfNarrow(t(s, dir, "documents"))
-        .select(col("doc_id"), Dedup.simhashMd5(toks).as("simhash16"))
+        .select(col("doc_id"), Dedup.simhash(toks, 16, Md5).as("simhash16"))
     }),
 
     // ORACLED document-fingerprint frame: BOTH order-sensitive signatures
-    // (SimHash + rolling hash) computed in one narrow pass, in their
-    // md5-permutation forms so the frame hash-compares cross-engine
-    // (md5 is bit-identical on both engines; the 64-bit xxhash64
-    // production kernels are covered by OperatorSpec/StreamingSpec and
-    // stay the fast path inside Dedup/StreamingScores). Compute-heavy
-    // narrow map ⇒ spread the single-file scan first.
+    // (SimHash + rolling hash) computed in one narrow pass under md5, so
+    // the frame hash-compares cross-engine (the 64-bit xxhash64 SimHash
+    // is covered by OperatorSpec/StreamingSpec). Compute-heavy narrow
+    // map ⇒ spread the single-file scan first.
     "q_text_signatures" -> ((s, dir) => {
       graft.operators.Similarity.spreadIfNarrow(t(s, dir, "documents"))
         .select(
           col("doc_id"),
-          Dedup.simhashMd5(toks).as("simhash16"),
-          TA.rollingHashMd5(toks).as("rolling_md5"))
+          Dedup.simhash(toks, 16, Md5).as("simhash16"),
+          TA.rollingHash(toks).as("rolling_md5"))
     }),
 
     // ORACLED rolling hash: md5-prefix token hashes (cross-engine
@@ -664,7 +662,7 @@ object TextQueries {
     // compute-heavy map ⇒ spread the single-file scan first.
     "q_rolling_md5" -> ((s, dir) => {
       graft.operators.Similarity.spreadIfNarrow(t(s, dir, "documents"))
-        .select(col("doc_id"), TA.rollingHashMd5(toks).as("rolling_md5"))
+        .select(col("doc_id"), TA.rollingHash(toks).as("rolling_md5"))
     }),
 
     // All-match extraction: digit runs and vowel runs per doc (the
@@ -907,7 +905,7 @@ object TextQueries {
     // closure (recursive CTE), so the whole pair-graph → CC → cluster
     // path hash-checks cross-engine. The xxhash64 fast path keeps its
     // coverage through q_minhash_lsh and the curation pipeline.
-    "q_neardup_clusters" -> ((s, dir) => neardupClustersMd5(s, dir)),
+    "q_neardup_clusters" -> ((s, dir) => neardupClusters(s, dir)),
 
     // Cluster-disjoint split, ORACLED end to end: the full md5 LSH ->
     // verify -> component chain above feeds
@@ -919,7 +917,7 @@ object TextQueries {
         .select(col("doc_id"), col("text"))
       // the cluster frame feeds the side-label join AND the split's own
       // group join; checkpoint so the LSH+CC chain runs once
-      val clusters = neardupClustersMd5(s, dir).localCheckpoint()
+      val clusters = neardupClusters(s, dir).localCheckpoint()
       val (tr, te) = graft.operators.Sampling.clusterDisjointSplit(
         docs, "doc_id", clusters, 0.3)
       val sides = tr.select(col("doc_id"), lit("train").as("side"))
@@ -1700,37 +1698,18 @@ object TextQueries {
       f
     }
 
-  /** The oracled md5 near-dup cluster chain (signatures k=8, 4 baked
-    * bands, capped candidates, 0.8 set-Jaccard verify, component
-    * closure), shared by q_neardup_clusters and q_cluster_split.
-    * Returns one (doc_id, component) row per non-null-text doc,
-    * singletons coalesced to their own id.
+  /** The oracled md5 near-dup clusters, shared by q_neardup_clusters and
+    * q_cluster_split: the production chain [[Dedup.nearDupClusters]]
+    * under md5 (signatures k=8, 4 baked bands, capped candidates, 0.8
+    * set-Jaccard verify, component closure). Returns one
+    * (doc_id, component) row per non-null-text doc, singletons coalesced
+    * to their own id.
     */
-  private def neardupClustersMd5(s: SparkSession, dir: String): DataFrame = {
+  private def neardupClusters(s: SparkSession, dir: String): DataFrame = {
     val docs = t(s, dir, "documents").filter(col("text").isNotNull)
       .select(col("doc_id"), col("text"))
-    val shingled = graft.operators.Similarity.spreadIfNarrow(docs)
-      .select(col("doc_id"),
-        TA.shingles(TA.tokens(col("text"))).as("sh"))
-      .withColumn("sig", Dedup.minhashSignatureMd5(col("sh"), 8))
-      .withColumn("band_keys",
-        when(coalesce(size(col("sh")), lit(0)) === 0,
-          lit(null).cast("array<string>"))
-          .otherwise(Dedup.lshBandKeysMd5(col("sig"), 4, 2)))
-      // checkpoint BEFORE the candidate join: projection collapse would
-      // otherwise inline the interpreted md5 fold per candidate row
-      .localCheckpoint()
-    val pairs = Dedup.lshCandidatePairs(
-      shingled.select(col("doc_id"), col("band_keys")), "doc_id")
-    val verified = pairs
-      .join(shingled.select(col("doc_id").as("id_a"), col("sh").as("sh_a")),
-        "id_a")
-      .join(shingled.select(col("doc_id").as("id_b"), col("sh").as("sh_b")),
-        "id_b")
-      .filter(Dedup.jaccard(col("sh_a"), col("sh_b")) >= 0.8)
-      .select(col("id_a"), col("id_b"))
-    val comp = graft.operators.ConnectedComponents
-      .run(verified, "id_a", "id_b")
+    val comp = Dedup.nearDupClusters(docs, "text", "doc_id", 0.8, Md5,
+      k = 8, bands = 4)
     docs.select(col("doc_id"))
       .join(comp.withColumnRenamed("id", "doc_id"), Seq("doc_id"), "left")
       .select(col("doc_id"),

@@ -223,20 +223,12 @@ object VectorQueries {
       // on concurrent action threads instead of paying two sequential
       // job+commit floors — the DeltaCurate.run append-pair pattern.
       // State seen by the query is identical: both complete before it.
-      val ec = scala.concurrent.ExecutionContext.global
-      val ap = scala.concurrent.Future {
+      graft.Concurrent.both(
         IncrementalAnn.append(e.filter(col("vec_id") % 4 === 0),
-          "vec_id", "embedding", "ianndel_idx", fitted = Some(cents)); ()
-      }(ec)
-      val del = scala.concurrent.Future {
+          "vec_id", "embedding", "ianndel_idx", fitted = Some(cents)),
         IncrementalAnn.deleteIds(
           e.filter(col("vec_id") % 10 === 3).select(col("vec_id")),
-          "vec_id", "ianndel_idx")
-      }(ec)
-      scala.concurrent.Await.result(ap,
-        scala.concurrent.duration.Duration.Inf)
-      scala.concurrent.Await.result(del,
-        scala.concurrent.duration.Duration.Inf)
+          "vec_id", "ianndel_idx"))
       IncrementalAnn.query(e, "vec_id", "embedding", "ianndel_idx", k = 3,
         fitted = Some(cents))
     }),
@@ -258,20 +250,12 @@ object VectorQueries {
       // month-1 append ∥ tombstone delete — the q_ann_incr_del_md5
       // overlap (optimization r17, guide §2.6); compact() requires both
       // complete and sees the identical state.
-      val ec = scala.concurrent.ExecutionContext.global
-      val ap = scala.concurrent.Future {
+      graft.Concurrent.both(
         IncrementalAnn.append(e.filter(col("vec_id") % 4 === 0),
-          "vec_id", "embedding", "iannc_idx", fitted = Some(cents)); ()
-      }(ec)
-      val del = scala.concurrent.Future {
+          "vec_id", "embedding", "iannc_idx", fitted = Some(cents)),
         IncrementalAnn.deleteIds(
           e.filter(col("vec_id") % 10 === 3).select(col("vec_id")),
-          "vec_id", "iannc_idx")
-      }(ec)
-      scala.concurrent.Await.result(ap,
-        scala.concurrent.duration.Duration.Inf)
-      scala.concurrent.Await.result(del,
-        scala.concurrent.duration.Duration.Inf)
+          "vec_id", "iannc_idx"))
       IncrementalAnn.compact(s, "iannc_idx", fitted = Some(cents))
       s.table("iannc_idx").select(col("cell"), col("id"))
     }),
@@ -630,20 +614,12 @@ object VectorQueries {
       // overlap (optimization r17, guide §2.6): codes table vs tombstone
       // sidecar, independent writes; compactPersisted requires both
       // complete and sees the identical state.
-      val ec = scala.concurrent.ExecutionContext.global
-      val ap = scala.concurrent.Future {
+      graft.Concurrent.both(
         IvfPq.appendPersisted(e.filter(col("vec_id") % 4 === 0),
-          "vec_id", "embedding", "ivfpqdel_idx", fitted = Some(models)); ()
-      }(ec)
-      val del = scala.concurrent.Future {
+          "vec_id", "embedding", "ivfpqdel_idx", fitted = Some(models)),
         IvfPq.deletePersisted(
           e.filter(col("vec_id") % 10 === 3).select(col("vec_id")),
-          "vec_id", "ivfpqdel_idx")
-      }(ec)
-      scala.concurrent.Await.result(ap,
-        scala.concurrent.duration.Duration.Inf)
-      scala.concurrent.Await.result(del,
-        scala.concurrent.duration.Duration.Inf)
+          "vec_id", "ivfpqdel_idx"))
       IvfPq.compactPersisted(s, "ivfpqdel_idx", fitted = Some(models))
       IvfPq.queryPersisted(e.filter(col("vec_id") % 40 === 0),
         "vec_id", "embedding", "ivfpqdel_idx", k = 3, nProbe = 2,

@@ -293,7 +293,8 @@ object StreamingScores {
     val sketched = docs
       .withColumn("__simhash",
         graft.operators.Dedup.simhash(
-          graft.operators.TextAnalysis.tokens(col(textCol))))
+          graft.operators.TextAnalysis.tokens(col(textCol)), 64,
+          graft.operators.SketchHash.XxHash64))
       .withWatermark(tsCol, watermark)
       .select(
         shiftrightunsigned(col("__simhash"), 64 - prefixBits).as("bucket"),
@@ -414,7 +415,8 @@ object StreamingScores {
     val sketched = docs
       .withColumn("__simhash",
         graft.operators.Dedup.simhash(
-          graft.operators.TextAnalysis.tokens(col(textCol))))
+          graft.operators.TextAnalysis.tokens(col(textCol)), 64,
+          graft.operators.SketchHash.XxHash64))
       .withWatermark(tsCol, watermark)
       .select(explode(array(bandStructs: _*)).as("__b"),
         col(idCol).cast("long").as("doc_id"),

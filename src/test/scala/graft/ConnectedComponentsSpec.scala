@@ -121,7 +121,8 @@ class ConnectedComponentsSpec extends SparkSpec {
       (50L, (100 until 200).map("other" + _).mkString(" "), "en"))
       .toDF("doc_id", "text", "lang")
     val pairs = graft.operators.Dedup
-      .nearDupPairs(docs, "text", "doc_id", 0.85)
+      .nearDupPairs(docs, "text", "doc_id", 0.85,
+        graft.operators.SketchHash.XxHash64)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     // precondition: exactly the path shape (also proves LSH recalled both)
     assert(pairs === Set((1L, 9L), (5L, 9L)), s"fixture pairs: $pairs")

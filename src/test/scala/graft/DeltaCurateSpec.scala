@@ -441,6 +441,32 @@ class DeltaCurateSpec extends SparkSpec {
     cleanTables()
   }
 
+  test("a dotted column name passes through the exact keeper " +
+      "(incrementalExact, bootstrapFrames, run)") {
+    cleanTables()
+    dropTable("dc_dot_fp")
+    // docs 1 and 2 share a text: the keeper is doc 1, with ITS meta.src
+    val m0 = Seq((1L, doc(1), "en", "a"), (2L, doc(1), "en", "b"),
+        (3L, doc(3), "en", "c"))
+      .toDF("doc_id", "text", "lang", "meta.src")
+    def idSrc(df: org.apache.spark.sql.DataFrame) =
+      df.select(col("doc_id"), col("`meta.src`")).as[(Long, String)]
+        .collect().toSet
+    val exact = graft.operators.Dedup.incrementalExact(m0, "text", "doc_id",
+      "dc_dot_fp", buckets = 4)
+    assert(exact.columns.toSeq === m0.columns.toSeq)
+    assert(idSrc(exact) === Set((1L, "a"), (3L, "c")))
+    val (fp, _, live) = DeltaCurate.bootstrapFrames(m0, "doc_id", "text",
+      "lang", cfg)
+    assert(fp.count() === 2L)
+    assert(live.select("doc_id").as[Long].collect().toSet === Set(1L, 3L))
+    val r0 = DeltaCurate.run(m0.limit(0), m0, "doc_id", "text", "lang", cfg,
+      "dc_fp", "dc_sig", buckets = 4)
+    assert(idSrc(r0.survivors) === Set((1L, "a"), (3L, "c")))
+    dropTable("dc_dot_fp")
+    cleanTables()
+  }
+
   test("compact recovers from a crash between the swap renames (no index loss)") {
     cleanTables()
     val m0 = (1 to 6).map(i => (i.toLong, doc(i), "en"))

@@ -4,7 +4,8 @@ import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.operators.{AsOfJoin, Dedup, Flatten, Sampling, Similarity, TextAnalysis => TA}
+import graft.operators.{AsOfJoin, Dedup, Flatten, Sampling, Similarity,
+  SketchHash, TextAnalysis => TA}
 import graft.schema.{DplaMap, SchemaAlign}
 
 /** Golden tests for operators whose semantics the DuckDB oracle can't
@@ -126,7 +127,7 @@ class OperatorSpec extends SparkSpec {
       Row(1L, "one two three four five six seven eight"),
       Row(2L, "one two three four five six seven eight"),
       Row(3L, "totally different words in this document here now"))
-    val sigs = Dedup.minhashed(d, "text", "doc_id")
+    val sigs = Dedup.minhashed(d, "text", "doc_id", SketchHash.XxHash64)
       .select(col("doc_id"), col("minhash_sig")).collect()
       .map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     assert(sigs(1L) === sigs(2L))
@@ -138,7 +139,8 @@ class OperatorSpec extends SparkSpec {
     val nearDup = (1 to 40).map(i => if (i == 40) "changed" else s"tok$i").mkString(" ")
     val other = (1 to 40).map(i => s"other$i").mkString(" ")
     val d = df(docsSchema, Row(1L, base), Row(2L, nearDup), Row(3L, other))
-    val pairs = Dedup.nearDupPairs(d, "text", "doc_id", threshold = 0.8)
+    val pairs = Dedup.nearDupPairs(d, "text", "doc_id", threshold = 0.8,
+      hash = SketchHash.XxHash64)
       .collect()
     assert(pairs.map(r => (r.getLong(0), r.getLong(1))).toSeq === Seq((1L, 2L)))
     assert(pairs.head.getAs[Double]("jaccard") > 0.8)
@@ -149,7 +151,8 @@ class OperatorSpec extends SparkSpec {
     val nearDup = base + " extra"
     val other = (1 to 60).map(i => s"zzz$i").mkString(" ")
     val d = df(docsSchema, Row(1L, base), Row(2L, nearDup), Row(3L, other))
-    val sh = d.select(col("doc_id"), Dedup.simhash(TA.tokens(col("text"))).as("s"))
+    val sh = d.select(col("doc_id"), Dedup.simhash(TA.tokens(col("text")), 64,
+      SketchHash.XxHash64).as("s"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     def ham(a: Long, b: Long) = java.lang.Long.bitCount(a ^ b)
     assert(ham(sh(1L), sh(2L)) < ham(sh(1L), sh(3L)))
@@ -160,7 +163,7 @@ class OperatorSpec extends SparkSpec {
     val d = df(docsSchema,
       Row(1L, "ab"), Row(2L, "cd"), Row(3L, "xy"), // < 3 tokens each
       Row(4L, "one two three four"))
-    val m = Dedup.minhashed(d, "text", "doc_id")
+    val m = Dedup.minhashed(d, "text", "doc_id", SketchHash.XxHash64)
     val nullKeys = m.filter(col("band_keys").isNull).count()
     assert(nullKeys === 3)
     // and therefore no spurious candidate pairs among the short docs

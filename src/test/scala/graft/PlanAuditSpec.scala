@@ -171,7 +171,8 @@ class PlanAuditSpec extends SparkSpec {
         org.apache.spark.sql.functions.col("text"))
     val p = graft.operators.Dedup
       .lshCandidatePairs(
-        graft.operators.Dedup.minhashed(docs, "text", "doc_id"), "doc_id")
+        graft.operators.Dedup.minhashed(docs, "text", "doc_id",
+          graft.operators.SketchHash.XxHash64), "doc_id")
       .queryExecution.executedPlan.toString
     assert(p.contains("graft_collect_capped"), p.take(800))
     assert(p.contains("graft_pair_gen"), p.take(800))

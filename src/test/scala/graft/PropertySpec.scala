@@ -103,15 +103,16 @@ class PropertySpec extends SparkSpec {
   test("simhashMd5: invariant under whole-document duplication (batched)") {
     // doubling every token doubles every bit vote, which cannot change any
     // sign — the defining robustness property of SimHash
-    import graft.operators.Dedup
+    import graft.operators.{Dedup, SketchHash}
     import spark.implicits._
     val docs = Gen.listOfN(60,
       Gen.nonEmptyListOf(Gen.alphaNumStr.suchThat(_.nonEmpty))).sample.get
     val df = docs.map(_.mkString(" ")).toDF("text")
     val toks = graft.operators.TextAnalysis.tokens(col("text"))
     val both = df.select(
-      Dedup.simhashMd5(toks).as("once"),
-      Dedup.simhashMd5(concat(toks, toks)).as("doubled"))
+      Dedup.simhash(toks, 16, SketchHash.Md5).as("once"),
+      Dedup.simhash(concat(toks, toks), 16, SketchHash.Md5)
+        .as("doubled"))
     assert(both.filter(col("once") =!= col("doubled")).count() === 0L)
   }
 

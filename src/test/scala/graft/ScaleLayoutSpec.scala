@@ -110,9 +110,11 @@ class ScaleLayoutSpec extends SparkSpec {
             .withColumn("__sh", graft.operators.TextAnalysis.shingles(
               graft.operators.TextAnalysis.tokens(col("text"))))
             .select(col("doc_id"),
-              Dedup.minhashSignatureMd5(col("__sh"), 8).as("bsig"))
+              Dedup.minhashSignature(col("__sh"), 8,
+                graft.operators.SketchHash.Md5).as("bsig"))
             .withColumn("key",
-              explode(Dedup.lshBandKeysMd5(col("bsig"), 4, 2)))
+              explode(Dedup.lshBandKeys(col("bsig"), 4, 2,
+                graft.operators.SketchHash.Md5)))
           bands.join(idx.join(okKeys, Seq("key")), Seq("key"))
             .queryExecution.executedPlan.toString
         } finally spark.conf.set("spark.sql.adaptive.enabled", "true")

@@ -35,7 +35,8 @@ class StreamingSpec extends SparkSpec {
     // suppressed; a band that forgets the docs it suppressed keeps C.
     def sk(t: String): Long =
       Seq(t).toDF("text").select(graft.operators.Dedup.simhash(
-        graft.operators.TextAnalysis.tokens(col("text"))).as("s"))
+        graft.operators.TextAnalysis.tokens(col("text")), 64,
+        graft.operators.SketchHash.XxHash64).as("s"))
         .head().getLong(0)
     def base(i: Int) = (0 until 40).map(j => s"c${i}q$j").mkString(" ")
     def edit(t: String, pos: Int, tag: String) = {
@@ -471,7 +472,8 @@ class StreamingSpec extends SparkSpec {
     val sketches = (0 until n).flatMap(i => Seq(baseText(i), varText(i)))
       .toDF("text")
       .select(graft.operators.Dedup.simhash(
-        graft.operators.TextAnalysis.tokens(col("text"))).as("s"))
+        graft.operators.TextAnalysis.tokens(col("text")), 64,
+        graft.operators.SketchHash.XxHash64).as("s"))
       .collect().map(_.getLong(0))
     // ground truth: pairs within hamming 3 (which pairs qualify, and how
     // many bits each edit flips, is hash-determined but deterministic)
@@ -549,7 +551,8 @@ class StreamingSpec extends SparkSpec {
       ((0 until 79).map("alpha" + _) :+ s"zz$i").mkString(" "))
     val sk = (Seq(base, distant) ++ candidates).toDF("text")
       .select(graft.operators.Dedup.simhash(
-        graft.operators.TextAnalysis.tokens(col("text"))).as("s"))
+        graft.operators.TextAnalysis.tokens(col("text")), 64,
+        graft.operators.SketchHash.XxHash64).as("s"))
       .collect().map(_.getLong(0))
     val nearIdx = (2 until sk.length).find(i =>
       java.lang.Long.bitCount(sk(0) ^ sk(i)) <= 3 &&

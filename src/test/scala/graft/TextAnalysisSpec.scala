@@ -447,10 +447,12 @@ class TextAnalysisSpec extends SparkSpec {
         array_min(transform(col("sh"), s => xxhash64(s, i))),
         lit(Long.MaxValue)))
     val bad = df
-      .withColumn("ksig", graft.operators.Dedup.minhashSignature(col("sh"), k))
+      .withColumn("ksig", graft.operators.Dedup.minhashSignature(col("sh"), k,
+        graft.operators.SketchHash.XxHash64))
       .withColumn("hsig", hofSig)
       .withColumn("kb",
-        graft.operators.Dedup.lshBandKeys(col("ksig"), bands, k / bands))
+        graft.operators.Dedup.lshBandKeys(col("ksig"), bands, k / bands,
+          graft.operators.SketchHash.XxHash64))
       .withColumn("hb", transform(
         sequence(lit(0), lit(bands - 1)),
         b => xxhash64(concat_ws(",",
@@ -462,7 +464,8 @@ class TextAnalysisSpec extends SparkSpec {
     // all-MaxValue signature via the coalesce wrapper
     val nullSig = Seq((1L)).toDF("id")
       .select(graft.operators.Dedup.minhashSignature(
-        lit(null).cast("array<string>"), 4).as("sig"))
+        lit(null).cast("array<string>"), 4,
+        graft.operators.SketchHash.XxHash64).as("sig"))
       .head.getSeq[Long](0)
     assert(nullSig === Seq.fill(4)(Long.MaxValue))
   }
@@ -486,10 +489,12 @@ class TextAnalysisSpec extends SparkSpec {
         s => md5(concat(i.cast("string"), lit(" "), s)))))
     val bad = df
       .withColumn("ksig",
-        graft.operators.Dedup.minhashSignatureMd5(col("sh"), k))
+        graft.operators.Dedup.minhashSignature(col("sh"), k,
+          graft.operators.SketchHash.Md5))
       .withColumn("hsig", hofSig)
       .withColumn("kb",
-        graft.operators.Dedup.lshBandKeysMd5(col("ksig"), bands, k / bands))
+        graft.operators.Dedup.lshBandKeys(col("ksig"), bands, k / bands,
+          graft.operators.SketchHash.Md5))
       .withColumn("hb", transform(
         sequence(lit(0), lit(bands - 1)),
         b => md5(concat(b.cast("string"), lit("|"),
@@ -501,8 +506,9 @@ class TextAnalysisSpec extends SparkSpec {
     assert(bad.isEmpty, s"md5 kernel/HOF divergence: ${bad.take(3).mkString(";")}")
     // null array completes to k null components, as the HOF form does
     val nullSig = Seq((1L)).toDF("id")
-      .select(graft.operators.Dedup.minhashSignatureMd5(
-        lit(null).cast("array<string>"), 4).as("sig"))
+      .select(graft.operators.Dedup.minhashSignature(
+        lit(null).cast("array<string>"), 4,
+        graft.operators.SketchHash.Md5).as("sig"))
       .head.getSeq[String](0)
     assert(nullSig === Seq(null, null, null, null))
   }
@@ -515,9 +521,10 @@ class TextAnalysisSpec extends SparkSpec {
     val fresh = spark.newSession()
     graft.plans.GraftFunctions.register(fresh)
     // construct the kernel column with the ORIGINAL session active: the
-    // dispatch's getActiveSession registers on `spark`, NOT on `fresh`
+    // kernel registration targets the active session, `spark`, NOT `fresh`
     org.apache.spark.sql.SparkSession.setActiveSession(spark)
-    val sig = graft.operators.Dedup.minhashSignatureMd5(col("sh"), 4)
+    val sig = graft.operators.Dedup.minhashSignature(col("sh"), 4,
+      graft.operators.SketchHash.Md5)
     try {
       val out = fresh.createDataFrame(
           java.util.List.of(org.apache.spark.sql.Row(Seq("a b c", "b c d"))),
