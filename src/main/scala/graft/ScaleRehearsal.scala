@@ -212,12 +212,14 @@ object ScaleRehearsal {
     * dimension perturbation per copy (copies are near-neighbors of each
     * other, not exact duplicates — exact ties would make top-k recall
     * ill-defined), then each ANN surface runs at 1× and at N× with the
-    * registry's own parameters. Asserted in-run (a green line IS the
+    * registry's own parameters: annLsh under xxhash64, annIvf's
+    * k-means fit → assign → 2-cell probe → top-k chain (the fit is
+    * timed, as index-build work). Asserted in-run (a green line IS the
     * proof, like the delta leg):
     *  (a) no broadcast/size gate trips at N× (the gates throw);
-    *  (b) wall stays sublinear: wall(N×) ≤ 0.7 · N · wall(1×) for each
-    *      of annLsh / annIvf / annPq / bitextMine — a quadratic
-    *      candidate blowup (bucket-cap or salt regression) blows
+    *  (b) wall stays sublinear: wall(N×) ≤ 0.7 · N · wall(1×) over the
+    *      annLsh / annIvf / annPq / bitextMine suite — a quadratic
+    *      candidate blowup (bucket- or cell-cap regression) blows
     *      through this immediately (it would be ~N× the 1× wall);
     *  (c) recall@3 vs the exact sampled baseline HOLDS at N× at the
     *      sf0.1 spec floors (lsh 0.015 / ivf 0.13 / pq 0.018): the
@@ -226,7 +228,7 @@ object ScaleRehearsal {
     */
   private def vectorLeg(spark: SparkSession, sfDir: String,
       blowup: Int): String = {
-    import graft.operators.{Pq, Similarity}
+    import graft.operators.{Pq, Similarity, SketchHash}
     val e0 = graft.sources.Tables.table(spark, sfDir, "embeddings")
     val dim = e0.select(size(col("embedding"))).head.getInt(0)
     def blow(df: org.apache.spark.sql.DataFrame, n: Int) =
@@ -250,7 +252,8 @@ object ScaleRehearsal {
     }
     def annCount(df: org.apache.spark.sql.DataFrame): Long = {
       def run() = Seq(
-        Similarity.annLsh(df, "vec_id", "embedding", k = 3).count(),
+        Similarity.annLsh(df, "vec_id", "embedding", k = 3,
+          SketchHash.XxHash64).count(),
         Similarity.annIvf(df, "vec_id", "embedding", k = 3).count(),
         Pq.annPq(df, df, "vec_id", "embedding",
           Pq.fit(df, "vec_id", "embedding", m = 4, k = 8, iters = 2),
@@ -283,7 +286,8 @@ object ScaleRehearsal {
       val got = pairs(ann).filter(p => sampleIds.contains(p._1))
       got.intersect(exact).size.toDouble / exact.size
     }
-    val rLsh = recallOf(Similarity.annLsh(blown, "vec_id", "embedding", 3))
+    val rLsh = recallOf(Similarity.annLsh(blown, "vec_id", "embedding", 3,
+      SketchHash.XxHash64))
     val rIvf = recallOf(Similarity.annIvf(blown, "vec_id", "embedding", 3))
     val rPq = recallOf(Pq.annPq(blown, blown, "vec_id", "embedding",
       Pq.fit(blown, "vec_id", "embedding", m = 4, k = 8, iters = 2), k = 3))

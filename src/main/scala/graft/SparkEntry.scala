@@ -123,7 +123,7 @@ object SparkEntry {
     * "rows_only (by design)" rather than a `no_oracle` error.
     */
   def rowsOnly: Set[String] = Set(
-    "q_ann_lsh", "q_ann_ivf", "q_ann_pq",
+    "q_ann_lsh", "q_ann_pq",
     "q_approx_distinct", "q_approx_percentile",
     "q_embed_neardup_lsh", "q_lsh_buckets", "q_minhash_lsh",
     "q_delta_index_write", "q_delta_index_bootstrap")

@@ -3,6 +3,8 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
+import graft.operators.SketchHash
+
 /** Vector math over `array<float>` embedding columns ([EXT], SURVEY.md §1.3
   * note on the `embeddings` fixture), expressed with higher-order array
   * built-ins (`zip_with` + `aggregate`) so the hot path stays in whole-stage
@@ -46,18 +48,25 @@ object VectorFunctions {
   }
 
   /** Deterministic pseudo-random hyperplane signs: bit j of the LSH sketch is
-    * sign(Σ_d v[d] · h(j,d)) with h(j,d) = (xxhash64(j,d) mod 2001 − 1000) /
-    * 1000 — a reproducible surrogate for a Gaussian random projection, fully
-    * evaluated in codegen (no stored projection matrix, no broadcast needed).
+    * sign(Σ_d v[d] · h(j,d)) with h(j,d) = (pmod(hash(j, d), 2001) − 1000) /
+    * 1000 — a reproducible surrogate for a Gaussian random projection, with
+    * no stored projection matrix and no broadcast. The hash and the index
+    * of the first dimension come from [[SketchHash]]: `XxHash64` (0-based)
+    * is the reference form of the codegen `graft_lsh_bucket` kernel
+    * (HyperplaneSketch, asserted equal in OperatorSpec); `Md5` (1-based, to
+    * match SQL `generate_series`) is bit-identical in every engine, so the
+    * bucket hash-compares against a DuckDB replay. Both engines fold the
+    * projection left to right in list order, so the sign decision is
+    * bit-identical too. The fold is interpreted (HOFs): sketch hot paths
+    * call the kernel for `XxHash64` and checkpoint the `Md5` fold.
     */
-  def lshBucket(v: Column, nBits: Int): Column = {
+  def lshBucket(v: Column, nBits: Int, hash: SketchHash): Column = {
     val dv = asDouble(v)
+    val dims = sequence(lit(hash.dimBase), size(dv) + (hash.dimBase - 1))
     val bits = (0 until nBits).map { j =>
       val proj = aggregate(
-        zip_with(
-          dv,
-          sequence(lit(0), size(dv) - 1),
-          (x, d) => x * ((pmod(xxhash64(lit(j), d), lit(2001L)) - 1000L)
+        zip_with(dv, dims,
+          (x, d) => x * ((pmod(hash.planeHash(j, d), lit(2001L)) - 1000L)
             .cast("double") / 1000.0)),
         lit(0.0), (acc, x) => acc + x)
       when(proj >= 0, lit(1L << j)).otherwise(lit(0L))
@@ -65,15 +74,6 @@ object VectorFunctions {
     bits.reduce((a, b) => a.bitwiseOR(b))
   }
 
-  /** ORACLE-friendly hyperplane sketch: hyperplane weight h(j,d) comes from
-    * the first three hex digits of md5("j d") instead of xxhash64 — md5 is
-    * bit-identical in every engine, so the bucket assignment itself
-    * hash-compares against a DuckDB reimplementation (the same trick as
-    * the md5 MinHash/SimHash variants; `lshBucket` stays the fast path).
-    * Dimension indices are 1-based to match SQL `generate_subscripts`.
-    * Both engines fold the projection left-to-right in list order, so the
-    * sign decision is bit-identical too.
-    */
   /** Johnson–Lindenstrauss random projection with Rademacher (±1) signs:
     * out[j] = dot(v, s_j) / sqrt(outDims), the standard dimensionality
     * reduction before ANN indexing or clustering when the native
@@ -109,24 +109,5 @@ object VectorFunctions {
       call_function("graft_dot", dv, signs) / sqrt(lit(outDims.toDouble))
     }
     array(comps: _*)
-  }
-
-  def lshBucketMd5(v: Column, nBits: Int = 8): Column = {
-    val dv = asDouble(v)
-    val bits = (0 until nBits).map { j =>
-      val proj = aggregate(
-        zip_with(
-          dv,
-          sequence(lit(1), size(dv)),
-          (x, d) => {
-            val hv = conv(
-              substring(md5(concat(lit(s"$j "), d.cast("string"))), 1, 3),
-              16, 10).cast("long")
-            x * ((hv % 2001L - 1000L).cast("double") / 1000.0)
-          }),
-        lit(0.0), (acc, x) => acc + x)
-      when(proj >= 0, lit(1L << j)).otherwise(lit(0L))
-    }
-    bits.reduce((a, b) => a.bitwiseOR(b))
   }
 }

@@ -29,7 +29,7 @@ object BloomPrefilter {
   /** Rows of `big` whose `bigKey` might match some `small.smallKey`
     * (superset of the exact semi join; follow with the exact join).
     *
-    * Like ivfCells' centroid table, the built filter is collected and
+    * Like annIvf's centroid table, the built filter is collected and
     * inlined as a binary literal: might_contain requires a constant (or
     * scalar subquery) filter, and a literal keeps the big-side pass a
     * fully narrow codegen'd filter — no join node at all. Building the

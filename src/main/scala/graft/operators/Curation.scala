@@ -152,21 +152,19 @@ object Curation {
   }
 
   /** Exact dedup keeping the lowest-id row per content fingerprint, as a
-    * single `min_by(struct(row), id)` aggregation rather than a
-    * row_number window: one scan, one shuffle on the fingerprint, no
-    * sort — the window shape shuffles the same full rows and then sorts
-    * every partition by (fp, id), and a keeper-join shape scans the input
-    * twice. Duplicate groups collapse map-side (partial min_by keeps one
-    * row per fingerprint per task), so skewed duplicate classes never
-    * concentrate rows on one reducer.
+    * single `min_by(struct(row), id)` aggregation ([[Dedup.keeperRows]])
+    * rather than a row_number window: one scan, one shuffle on the
+    * fingerprint, no sort — the window shape shuffles the same full rows
+    * and then sorts every partition by (fp, id), and a keeper-join shape
+    * scans the input twice. Duplicate groups collapse map-side (partial
+    * min_by keeps one row per fingerprint per task), so skewed duplicate
+    * classes never concentrate rows on one reducer. Output columns keep
+    * the input's order; dotted names (`meta.src`) pass through.
     */
-  def dropExactDups(docs: DataFrame, textCol: String, idCol: String): DataFrame = {
-    val cols = docs.columns.toIndexedSeq
-    docs
-      .groupBy(TextAnalysis.fingerprint(col(textCol)).as("__fp"))
-      .agg(min_by(struct(cols.map(col): _*), col(idCol)).as("__best"))
-      .select(col("__best.*"))
-  }
+  def dropExactDups(docs: DataFrame, textCol: String, idCol: String): DataFrame =
+    Dedup.keeperRows(
+      docs.withColumn("__fp", TextAnalysis.fingerprint(col(textCol))), idCol)
+      .drop("__fp")
 
   /** Near-dup removal: LSH candidates verified by n-gram Jaccard; the
     * HIGHER id of each pair ≥ threshold is dropped (anti join on the id).

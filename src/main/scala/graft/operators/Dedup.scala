@@ -3,11 +3,12 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** The hash a text sketch runs under — only what differs between the two
+/** The hash a sketch runs under — only what differs between the two
   * families: the MinHash and band-key kernels, the signature element type
   * (`bigint` components and band keys vs lowercase hex strings), the
-  * component an empty shingle set gets, and SimHash's per-token hash with
-  * its bit extraction.
+  * component an empty shingle set gets, SimHash's per-token hash with its
+  * bit extraction, and the hyperplane hash h(j, d) with its dimension
+  * base for the vector sketch (`VectorFunctions.lshBucket`).
   */
 sealed abstract class SketchHash(
     private[graft] val minhashKernel: String,
@@ -19,13 +20,20 @@ sealed abstract class SketchHash(
   private[graft] def tokenHash(t: Column): Column
   /** Bit `i` (an int column) of a [[tokenHash]] value, as a 0/1 bigint. */
   private[graft] def bit(h: Column, i: Column): Column
+  /** Hyperplane `j`'s hash at dimension index `d` (an int column); the
+    * weight is `(pmod(h, 2001) − 1000) / 1000`.
+    */
+  private[graft] def planeHash(j: Int, d: Column): Column
+  /** Index of a vector's first dimension as [[planeHash]] sees it. */
+  private[graft] def dimBase: Int
 }
 
 object SketchHash {
 
   /** xxhash64 permutations: the fast path, Spark-only. The empty-set
     * component is Long.MaxValue (the identity of min); SimHash bit i is
-    * bit i of the token's 64-bit hash.
+    * bit i of the token's 64-bit hash; the hyperplane hash is
+    * xxhash64(j, d) over 0-based dims (the `graft_lsh_bucket` kernel).
     */
   case object XxHash64
       extends SketchHash("graft_minhash", "graft_lsh_bands", "bigint") {
@@ -35,12 +43,16 @@ object SketchHash {
     // shift amount; the SQL function takes an expression
     private[graft] def bit(h: Column, i: Column): Column =
       call_function("shiftright", h, i).bitwiseAND(lit(1L))
+    private[graft] def planeHash(j: Int, d: Column): Column = xxhash64(lit(j), d)
+    private[graft] val dimBase: Int = 0
   }
 
   /** md5 permutations: bit-identical in every engine, so the oracle can
     * replay the sketch. The empty-set component is NULL (DuckDB's
     * `list_min([])`); SimHash bit i reads hex digit i/4 of the token's
-    * md5, bit 3-(i%4) (MSB-first within the digit).
+    * md5, bit 3-(i%4) (MSB-first within the digit); the hyperplane hash
+    * is the first three hex digits of md5("j d") over 1-based dims (SQL
+    * `generate_series(1, len(e))`).
     */
   case object Md5
       extends SketchHash("graft_minhash_md5", "graft_lsh_bands_md5", "string") {
@@ -53,6 +65,10 @@ object SketchHash {
       call_function("shiftright", digit, lit(3) - i.bitwiseAND(lit(3)))
         .bitwiseAND(lit(1L))
     }
+    private[graft] def planeHash(j: Int, d: Column): Column =
+      conv(substring(md5(concat(lit(s"$j "), d.cast("string"))), 1, 3),
+        16, 10).cast("long")
+    private[graft] val dimBase: Int = 1
   }
 }
 

@@ -28,7 +28,7 @@ import org.apache.spark.sql.functions._
   * the q_ann_incr_md5 oracle replays in SQL:
   *
   *   query(bootstrap(A) then append(B))
-  *     ≡ [[Similarity.annIvfMd5]] over A ∪ B with
+  *     ≡ [[Similarity.annIvf]] over A ∪ B with
   *       `fitted = Clustering.kmeansFit(A)`
   *
   * i.e. appending then querying equals batch-building under the bootstrap
@@ -89,7 +89,7 @@ object IncrementalAnn {
     * non-bootstrap append the caller MUST pass the value a prior
     * append/bootstrap for THIS index returned — anything else silently
     * assigns the batch under a different quantizer than the index's
-    * earlier rows (the same trust contract as annIvfMd5's
+    * earlier rows (the same trust contract as annIvf's
     * `fittedCellCounts`); when in doubt, omit it and pay the sidecar
     * read. The spec pins fitted-path ≡ sidecar-read-path equivalence.
     */
@@ -214,7 +214,7 @@ object IncrementalAnn {
     * query its `nProbe` nearest cells (narrow kernel pass), join the
     * probes one-sided against the bucketed index scan, verify with the
     * round-4 cosine, elect (sim4 DESC, n_id ASC) top-k via the bounded
-    * `graft_topk` heap — the [[Similarity.annIvfMd5]] probe contract
+    * `graft_topk` heap — the [[Similarity.annIvf]] probe contract
     * against persisted state.
     *
     * `excludeSelf` drops candidates whose index id equals the query id
@@ -250,7 +250,7 @@ object IncrementalAnn {
     * pins for both). `spreadIfNarrow` is broadcast-regime-only on
     * purpose: a round-robin spread of the index scan would destroy the
     * bucket distribution the shuffle regime relies on. Same shape as the
-    * batch family's un-hinted probe join ([[Similarity.annIvfMd5]]).
+    * batch family's un-hinted probe join ([[Similarity.annIvf]]).
     *
     * Estimate caveat: without CBO, filters and localCheckpoint barriers
     * inherit their child's sizeInBytes UNREDUCED, so a heavily-filtered

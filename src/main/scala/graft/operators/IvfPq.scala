@@ -7,7 +7,7 @@ import graft.functions.VectorFunctions.asDouble
 
 /** IVF+PQ compound ANN ([EXT]): the production composition of the two
   * index halves this engine already ships separately — a coarse quantizer
-  * routes every vector to an inverted-list cell ([[Similarity.annIvfMd5]]'s
+  * routes every vector to an inverted-list cell ([[Similarity.annIvf]]'s
   * contract), and the RESIDUAL against that cell's centroid is product-
   * quantized into `m` small codes ([[Pq]]'s contract). A query probes its
   * `nProbe` nearest cells and scores candidates by asymmetric distance:

@@ -1,9 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.functions.VectorFunctions._
 
@@ -22,17 +21,20 @@ import graft.functions.VectorFunctions._
   *    near-parallel vectors in the same bucket; scoring happens only within
   *    buckets (equi-join on bucket id ⇒ plain shuffle hash join, no
   *    cartesian). Recall is tunable via nBits; candidates per bucket are
-  *    capped so a degenerate bucket cannot go quadratic.
-  *  - `annIvf` — approximate, trained: one Lloyd step builds a coarse
-  *    quantizer; the tiny centroid table is collected and inlined so cell
-  *    assignment is a narrow codegen'd map (no join, no vector shuffle).
+  *    capped so a degenerate bucket cannot go quadratic. The hash is an
+  *    argument ([[SketchHash]]): xxhash64 for the kernel fast path, md5 for
+  *    the oracled replay — one chain either way.
+  *  - `annIvf` — approximate, trained: the md5-seeded k-means fit is the
+  *    coarse quantizer; its tiny centroid table rides as one kernel literal,
+  *    so cell assignment and probing are narrow codegen'd maps (no join, no
+  *    vector shuffle) and only the cell-keyed candidate join shuffles.
   *
-  * Cache lifecycle: the ANN operators persist their index frame
-  * (sketch/cell assignment) because it feeds a cap-count plus both
-  * self-join sides; the returned DataFrame is lazy, so the operator
-  * cannot know when to release it. Long-running sessions interleaving
-  * unrelated heavy work should `spark.catalog.clearCache()` between
-  * workloads (graft.Bench does exactly this between timed runs).
+  * Index lifecycle: `annLsh` materializes its bucket frame as an eager
+  * localCheckpoint because it feeds a cap-count plus both self-join sides;
+  * the returned DataFrame is lazy, so the operator cannot know when to
+  * release the blocks. Long-running sessions interleaving unrelated heavy
+  * work should `spark.catalog.clearCache()` between workloads (graft.Bench
+  * does exactly this between timed runs).
   */
 object Similarity {
 
@@ -57,8 +59,8 @@ object Similarity {
     // which divides the raw dot by the norms — same operation sequence ⇒
     // same rounded value. Normalizing first changes the per-element
     // rounding (~1e-14), enough to flip a 4-decimal boundary on rare pairs
-    // and fail the gate non-deterministically. The rows-only ANN paths
-    // keep the cheaper normalize+dot scoring.
+    // and fail the gate non-deterministically. The rows-only
+    // embeddingNearDupPairs keeps the cheaper normalize+dot scoring.
     //
     val q = spreadIfNarrow(queries.select(col(idCol).as("q_id"),
       asDouble(col(vecCol)).as("q_vec")))
@@ -246,183 +248,6 @@ object Similarity {
       .select(col("q_id"), col("t.id").as("n_id"), col("t.score").as("sim4"),
         (col("pos") + 1).cast("long").as("rn"))
 
-  /** IVF coarse quantizer: deterministic seeding (hash of id → cell) + one
-    * Lloyd iteration with the VectorAvg partial aggregate. The centroid
-    * table is nCells × dim doubles — 16 cells × 64 dims is ~8 KB, but 10k
-    * cells × 768 dims is ~60 MB, far too large for a plan literal (codegen
-    * and plan-serialization blowup). So: up to `maxInlineDoubles` the
-    * collected centroids are inlined and assignment is a narrow codegen'd
-    * per-row argmax (zero joins, zero vector shuffles); above it,
-    * assignment falls back to a broadcast join against the centroid table
-    * plus a max_by argmax aggregate (one shuffle of (id, cell, vec) rows).
-    * At 100 TB: training touches each vector twice (seed-agg, map-side
-    * combined; then the assignment scan); the only training exchange moves
-    * nCells partial sums.
-    *
-    * NOTE: like an ML `fit`, CONSTRUCTING this frame runs the training job
-    * (the centroid collect) eagerly — callers that only want to inspect a
-    * plan still pay one aggregation over `df`. Ids are assumed unique (the
-    * usual vector-index contract); duplicate ids yield duplicate rows here
-    * and duplicate candidates downstream.
-    */
-  /** [[ivfCells]]'s one-pass seed-cell centroid fit as PURE DATA —
-    * (cell, centroid) pairs, memoizable per fixture dir like the md5
-    * family's kmeans fit (round 13: q_ann_ivf re-ran this aggregate +
-    * collect every bench run). Null-vector-only seed cells are dropped
-    * here exactly as the inline fit does (their rows re-assign to the
-    * nearest surviving centroid).
-    */
-  def ivfCellsFit(df: DataFrame, idCol: String, vecCol: String,
-      nCells: Int = 16): Seq[(Long, Seq[Double])] = {
-    graft.plans.GraftFunctions.register(df.sparkSession)
-    fitCells(spreadIfNarrow(df)
-      .select(col(idCol), asDouble(col(vecCol)).as("__v"))
-      .withColumn("__seed_cell", pmod(xxhash64(col(idCol)), lit(nCells.toLong))))
-  }
-
-  private def fitCells(v: DataFrame): Seq[(Long, Seq[Double])] =
-    v.groupBy(col("__seed_cell").as("cell"))
-      .agg(expr("graft_vector_avg(__v)").as("centroid"))
-      .collect()
-      // a seed cell of only-null vectors averages to a null centroid —
-      // unusable as an assignment target, so it is dropped
-      .toIndexedSeq
-      .filter(r => !r.isNullAt(r.fieldIndex("centroid")))
-      .map(r => (r.getAs[Long]("cell"),
-        r.getAs[scala.collection.Seq[Double]]("centroid").toIndexedSeq))
-
-  def ivfCells(df: DataFrame, idCol: String, vecCol: String,
-      nCells: Int = 16, maxInlineDoubles: Long = 1L << 18,
-      persistInput: Boolean = true,
-      fitted: Option[Seq[(Long, Seq[Double])]] = None): DataFrame = {
-    graft.plans.GraftFunctions.register(df.sparkSession)
-    // the (id, vec) projection feeds the eager training aggregate AND the
-    // assignment scan below — persist so the parquet scan + float→double
-    // cast run once (training materializes the cache). Callers that
-    // persist a derivative of this frame themselves (annIvf caches the
-    // normalized cells) pass persistInput = false: one extra columnar
-    // scan beats holding the vectors in cache twice.
-    // spread FIRST: the assignment argmax below is CPU-bound per row
-    // (nCells dot products over an interpreted fold), and the embeddings
-    // fixture is a single-file scan — unspread it runs in one task
-    // (measured 0.8 s of the sf0.1 IVF wall in one core)
-    val base = spreadIfNarrow(df)
-      .select(col(idCol), asDouble(col(vecCol)).as("__v"))
-      .withColumn("__seed_cell", pmod(xxhash64(col(idCol)), lit(nCells.toLong)))
-    val v =
-      if (persistInput) base.persist(StorageLevel.MEMORY_AND_DISK) else base
-    // `fitted` (the memoized [[ivfCellsFit]] result) skips the training
-    // aggregate + collect entirely — the md5 family's fitted-model
-    // discipline applied to the xxhash path (round 13): the seed-cell
-    // centroid table is pure data keyed by (fixture, nCells)
-    val centroids: Seq[(Long, Seq[Double])] =
-      fitted.getOrElse(fitCells(v))
-    if (centroids.isEmpty) {
-      // empty input: keep the schema contract (id, cell, __v)
-      return v.select(col(idCol), lit(null).cast("bigint").as("cell"),
-        col("__v"))
-    }
-    val dim = centroids.head._2.length
-    if (centroids.length.toLong * dim <= maxInlineDoubles) {
-      val centArr = array(centroids.map { case (cell, cent) =>
-        struct(
-          typedLit(cent).as("centroid"),
-          lit(cell).as("cell"))
-      }.toIndexedSeq: _*)
-      // per-row argmax via lexicographic array_max on (sim, -cell): highest
-      // similarity wins, ties break to the lowest cell id — the same order
-      // max_by(cell, struct(sim, -cell)) produced when this was a join.
-      val scoredCells = transform(centArr, c =>
-        struct(
-          call_function("graft_cosine", col("__v"), c.getField("centroid"))
-            .as("sim"),
-          (-c.getField("cell")).as("negcell")))
-      v.select(col(idCol),
-        (-array_max(scoredCells).getField("negcell")).as("cell"),
-        col("__v"))
-    } else {
-      // large-codebook path: broadcast-join assignment. Same argmax order
-      // (sim desc, cell asc) via max_by over a (sim, -cell) struct key.
-      // Grouping runs on a per-ROW id (monotonically_increasing_id is
-      // stable within one execution), not on idCol — duplicate ids must
-      // yield duplicate rows exactly like the inline path, so the result
-      // cannot silently change shape across the maxInlineDoubles
-      // threshold.
-      import df.sparkSession.implicits._
-      val centDf = centroids.toIndexedSeq.toDF("__cc", "__centroid")
-      v.withColumn("__row", monotonically_increasing_id())
-        .crossJoin(broadcast(centDf))
-        .select(col("__row"), col(idCol), col("__v"),
-          struct(
-            call_function("graft_cosine", col("__v"), col("__centroid"))
-              .as("sim"),
-            (-col("__cc")).as("negcell")).as("__key"),
-          col("__cc"))
-        .groupBy(col("__row"))
-        .agg(first(col(idCol)).as(idCol),
-          expr("max_by(__cc, __key)").as("cell"),
-          first(col("__v")).as("__v"))
-        .select(col(idCol), col("cell"), col("__v"))
-    }
-  }
-
-  /** IVF-probed approximate top-k: score only same-cell pairs. Cells larger
-    * than `maxCellSize` are dropped (same degeneracy guard as annLsh): a
-    * dense cell under a 16-value join key would otherwise collapse
-    * parallelism to one task and go quadratic on it. The cap uses a
-    * broadcast of the tiny per-cell count table — a count(*) window over
-    * the rows would shuffle every vector once more.
-    *
-    * `saltFactor` spreads the self-join: with nCells≈16 the join key has 16
-    * values, so on a 1000-core cluster 984 cores would idle through the
-    * scoring stage. Salting joins on (cell, salt) — query side hashed to
-    * one salt, candidate side replicated to all of them — multiplying
-    * usable parallelism by saltFactor for saltFactor× candidate-side
-    * shuffle volume. The candidate pair set is provably unchanged: each
-    * (q, n) same-cell pair meets in exactly the q's salt slot.
-    */
-  def annIvf(df: DataFrame, idCol: String, vecCol: String,
-      k: Int, nCells: Int = 16, maxCellSize: Int = 100000,
-      saltFactor: Int = 8,
-      fitted: Option[Seq[(Long, Seq[Double])]] = None): DataFrame = {
-    require(saltFactor >= 1, s"saltFactor must be >= 1, got $saltFactor")
-    // (id, cell, unit vector) is the IVF index itself, read three times
-    // below (cap count + both self-join sides) — materialize it ONCE,
-    // eagerly, as a localCheckpoint rather than a lazy persist: AQE
-    // launches the independent consumer stages concurrently, and with a
-    // lazy cache they all race the block lock of the first-touch
-    // materialization — JobProfile showed three 0.7 s zero-CPU stages
-    // convoyed behind the one computing the cache. Checkpoint blocks are
-    // computed once up front, every consumer reads bytes, and downstream
-    // plans start from a LogicalRDD (AQE can size/broadcast them). On a
-    // real cluster prefer reliable checkpoint dirs for executor-loss
-    // recovery; the storage footprint matches what an index build would
-    // materialize anyway. persistInput = false: materializing BOTH the
-    // raw projection and this derived frame would hold the vectors twice.
-    val cells = ivfCells(df, idCol, vecCol, nCells, persistInput = false,
-      fitted = fitted)
-      .withColumn("__v", normalize(col("__v")))
-      .localCheckpoint()
-    val keptCells = cells.groupBy(col("cell"))
-      .agg(count(lit(1)).as("__csize"))
-      .filter(col("__csize") <= maxCellSize)
-      .select(col("cell"))
-    val bounded = cells.join(broadcast(keptCells), "cell")
-    val a = bounded.select(col(idCol).as("q_id"), col("__v").as("q_vec"),
-      col("cell"))
-      .withColumn("__salt",
-        pmod(xxhash64(col("q_id")), lit(saltFactor.toLong)))
-    val b = bounded.select(col(idCol).as("n_id"), col("__v").as("n_vec"),
-      col("cell"))
-      .withColumn("__salt",
-        explode(sequence(lit(0L), lit(saltFactor - 1L))))
-    val scored = a.join(b, Seq("cell", "__salt"))
-      .filter(col("q_id") =!= col("n_id"))
-      .select(col("q_id"), col("n_id"),
-        round(expr("graft_dot(q_vec, n_vec)"), 4).as("sim4"))
-    topKPerQuery(scored, k)
-  }
-
   /** Per-vector LSH sketch assignment (narrow, shuffle-free; fused codegen
     * loop — see HyperplaneSketch).
     */
@@ -471,7 +296,7 @@ object Similarity {
     // single-file scan would run it for the whole corpus in one task
     // (measured 4.3s of a 5.6s query at sf0.1)
     // eager localCheckpoint, not lazy persist: concurrent consumer stages
-    // convoy on a lazy cache's first-touch block lock (see annIvf)
+    // convoy on a lazy cache's first-touch block lock (see annLsh)
     val vecs = spreadIfNarrow(df)
       .select(col(idCol), normalize(col(vecCol)).as("__v"))
       .localCheckpoint()
@@ -509,7 +334,7 @@ object Similarity {
     * the centroid table (list sizes are what a probe planner consults).
     * One narrow pass (assignment kernel → 8-ish-group count → bounded
     * collect of ≤ nCells rows); fit-time callers memoize it with the
-    * centroids so [[annIvfMd5]]'s `maxCellSize` gate costs the QUERY
+    * centroids so [[annIvf]]'s `maxCellSize` gate costs the QUERY
     * nothing (the r12 verdict's "three overlapped single-task scans" —
     * the third scan was exactly this histogram recomputed per query).
     */
@@ -529,28 +354,27 @@ object Similarity {
   }
 
   /** IVF ANN with a fully DETERMINISTIC, cross-engine-replayable chain
-    * ([EXT]) — the md5 sibling of [[annIvf]], mirroring [[annLshMd5]]:
-    * centroids are the md5-seeded k-means fit (the oracled q_kmeans
-    * fit — Clustering.kmeansFit), each vector is assigned to its argmax
-    * cell (cosine rounded to 6 decimals, cell-id tie-break), each QUERY
-    * probes its top-`nProbe` cells in the same rounded order, candidates
-    * are the probed cells' members (each point lives in exactly one
-    * cell, so no candidate dedup is needed), verification is the exact
-    * cosine rounded to 4, top-k by (sim4 DESC, id ASC). Every stage is
-    * a pure function of the input — DuckDB replays fit, assignment,
-    * probe order, and verify bit-identically, so the WHOLE chain is
-    * hash-oracled (q_ann_ivf_md5), unlike the salted xxhash [[annIvf]]
-    * scale path which stays rows-only + recall-floored.
+    * ([EXT]): centroids are the md5-seeded k-means fit (the oracled
+    * q_kmeans fit — Clustering.kmeansFit), each vector is assigned to its
+    * argmax cell (cosine rounded to 6 decimals, cell-id tie-break), each
+    * QUERY probes its top-`nProbe` cells in the same rounded order,
+    * candidates are the probed cells' members (each point lives in
+    * exactly one cell, so no candidate dedup is needed), verification is
+    * the exact cosine rounded to 4, top-k by (sim4 DESC, id ASC). Every
+    * stage is a pure function of the input — DuckDB replays fit,
+    * assignment, probe order, and verify bit-identically, so the WHOLE
+    * chain is hash-oracled (q_ann_ivf_md5, and q_ann_ivf's per-query
+    * summary of it).
     *
     * Scale shape: the fit is the k·dim literal-table pass (corpus never
     * shuffles); assignment/probing are narrow kernel passes; the
     * candidate join is cell-keyed with `maxCellSize` failing closed on
     * degenerate fits — against the fitted directory (`fittedCellCounts`,
-    * one memoized histogram pass at fit time) the gate is a driver-side
-    * isin filter, otherwise an inline count + broadcast join. At extreme
-    * per-cell skew prefer [[annIvf]]'s salted join.
+    * one histogram pass at fit time) the gate is a driver-side isin
+    * filter, otherwise an inline count + broadcast join. Ids are assumed
+    * unique (the usual vector-index contract).
     */
-  def annIvfMd5(
+  def annIvf(
       df: DataFrame,
       idCol: String,
       vecCol: String,
@@ -633,32 +457,45 @@ object Similarity {
     topKPerQuery(verified, k)
   }
 
-  /** [[annLsh]] with md5-derived hyperplanes and round-4 cosine scoring —
-    * the HASH-ORACLED variant of the full ANN chain. Every stage is
-    * cross-engine deterministic: the bucket is the q_lsh_bucket_md5
-    * sketch, candidates are same-bucket pairs under the same
-    * `maxBucketSize` cap, verification is `round(cos, 4)`, and the
-    * top-k election orders (sim4 DESC, id ASC) — so DuckDB replays the
-    * candidate → verify → top-k chain bit-identically, closing the
-    * quality gap the xxhash64 fast path (rows-only by nature) leaves to
-    * recall floors. Returns (q_id, n_id, sim4, rn), rn ≤ k.
+  /** Approximate top-k by hyperplane LSH: score only same-bucket pairs.
+    * The bucket is [[VectorFunctions.lshBucket]] under `hash` —
+    * [[SketchHash.XxHash64]] runs the codegen `graft_lsh_bucket` kernel,
+    * [[SketchHash.Md5]] the md5 fold. Buckets over `maxBucketSize` are
+    * dropped via a broadcast count-table join (not a per-row window —
+    * that would shuffle every vector), verification is the exact cosine
+    * rounded to 4, and the bounded graft_topk aggregate elects
+    * (sim4 DESC, id ASC) so the post-scoring exchange carries
+    * O(queries × k) rows. Under `Md5` every stage is cross-engine
+    * deterministic, so DuckDB replays the candidate → verify → top-k
+    * chain bit-identically (q_ann_lsh_md5); under `XxHash64` the same
+    * chain is rows-only and recall-floored (q_ann_lsh). Returns
+    * (q_id, n_id, sim4, rn), rn ≤ k.
     */
-  def annLshMd5(
+  def annLsh(
       df: DataFrame,
       idCol: String,
       vecCol: String,
       k: Int,
+      hash: SketchHash,
       nBits: Int = 8,
       maxBucketSize: Int = 10000): DataFrame = {
     require(k >= 1, s"k must be positive, got $k")
     graft.plans.GraftFunctions.register(df.sparkSession)
-    // the md5 bucket is nBits × dim interpreted md5 folds per vector —
-    // checkpoint so neither join side nor the cap count recomputes it
-    // (the signature-frame lesson); spread first for the same reason
-    val b = spreadIfNarrow(df)
+    val bucket = hash match {
+      case SketchHash.XxHash64 =>
+        call_function("graft_lsh_bucket", asDouble(col(vecCol)), lit(nBits))
+      case SketchHash.Md5 => lshBucket(col(vecCol), nBits, hash)
+    }
+    // the bucket feeds the cap count and both self-join sides — checkpoint
+    // eagerly so none of them recomputes it (the md5 fold is nBits × dim
+    // interpreted md5 calls per vector; the signature-frame lesson), and
+    // so AQE's concurrent consumer stages do not convoy on a lazy cache's
+    // first-touch block lock. Spread first: a single-file scan would pay
+    // the whole sketch in one task. Null vectors have no direction: they
+    // enter no bucket (as in annIvf).
+    val b = spreadIfNarrow(df.filter(col(vecCol).isNotNull))
       .select(col(idCol), asDouble(col(vecCol)).as("__v"),
-        graft.functions.VectorFunctions.lshBucketMd5(col(vecCol), nBits)
-          .as("__bucket"))
+        bucket.as("__bucket"))
       .localCheckpoint()
     val kept = b.groupBy(col("__bucket"))
       .agg(count(lit(1)).as("__n"))
@@ -669,51 +506,13 @@ object Similarity {
       col("__v").as("q_vec"))
     val c = bounded.select(col("__bucket"), col(idCol).as("n_id"),
       col("__v").as("n_vec"))
-    // graft_topk, not a row_number window — see annIvfMd5: identical
+    // graft_topk, not a row_number window — see annIvf: identical
     // election (sim4 DESC, n_id ASC; n_id unique per q_id — one bucket
     // per vector), O(queries × k) exchange instead of a full pair sort
     val scored = a.join(c, Seq("__bucket"))
       .filter(col("q_id") =!= col("n_id"))
       .select(col("q_id"), col("n_id"),
         round(expr("graft_cosine(q_vec, n_vec)"), 4).as("sim4"))
-    topKPerQuery(scored, k)
-  }
-
-  /** Approximate top-k: score only same-bucket pairs. Degenerate buckets
-    * are dropped via a broadcast count-table join (not a per-row window —
-    * that would shuffle every vector), and per-query ranking uses the
-    * bounded graft_topk aggregate so the post-scoring exchange carries
-    * O(queries × k) rows.
-    */
-  def annLsh(
-      df: DataFrame,
-      idCol: String,
-      vecCol: String,
-      k: Int,
-      nBits: Int = 8,
-      maxBucketSize: Int = 10000): DataFrame = {
-    graft.plans.GraftFunctions.register(df.sparkSession)
-    // same materialize-once rationale as annIvf (eager checkpoint, not a
-    // lazy cache the concurrent consumers would convoy on): the
-    // sketch+normalize projection feeds the cap count and both self-join
-    // sides. spread first: normalize is an interpreted HOF fold and a
-    // single-file scan would pay it all in one task.
-    val s = sketched(spreadIfNarrow(df), idCol, vecCol, nBits)
-      .select(col(idCol), normalize(col(vecCol)).as(vecCol), col("bucket"))
-      .localCheckpoint()
-    val keptBuckets = s.groupBy(col("bucket"))
-      .agg(count(lit(1)).as("__bsize"))
-      .filter(col("__bsize") <= maxBucketSize)
-      .select(col("bucket"))
-    val bounded = s.join(broadcast(keptBuckets), "bucket")
-    val a = bounded.select(col(idCol).as("q_id"), col(vecCol).as("q_vec"),
-      col("bucket"))
-    val b = bounded.select(col(idCol).as("n_id"), col(vecCol).as("n_vec"),
-      col("bucket"))
-    val scored = a.join(b, "bucket")
-      .filter(col("q_id") =!= col("n_id"))
-      .select(col("q_id"), col("n_id"),
-        round(expr("graft_dot(q_vec, n_vec)"), 4).as("sim4"))
     topKPerQuery(scored, k)
   }
 
@@ -741,8 +540,7 @@ object Similarity {
       // belong in NO cell; semanticDedup passes them through.
       .filter(!degenerateVec(col(vecCol)))
       .select(col(idCol),
-        graft.functions.VectorFunctions.lshBucketMd5(col(vecCol), nBits)
-          .as("cell"))
+        lshBucket(col(vecCol), nBits, SketchHash.Md5).as("cell"))
       .groupBy(col("cell"))
       .agg(min(col(idCol)).as("keeper"),
         count(lit(1)).cast("long").as("n_members"))

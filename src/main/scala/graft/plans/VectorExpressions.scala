@@ -145,10 +145,11 @@ case class DotProduct(left: Expression, right: Expression)
   * sign(Σ_d v[d] · h(j,d)) with h(j,d) = (pmod(xxhash64(j,d), 2001) − 1000)
   * / 1000 — bit-identical to the reference implementation built from
   * `zip_with`/`aggregate`/`xxhash64` in
-  * `graft.functions.VectorFunctions.lshBucket` (asserted equal in
-  * OperatorSpec), but ~2 orders of magnitude faster: the HOF pipeline is
-  * interpreted (ArrayTransform/ArrayAggregate have no doGenCode) and pays
-  * per-element lambda dispatch plus a sequence() allocation per bit, while
+  * `graft.functions.VectorFunctions.lshBucket` under `SketchHash.XxHash64`
+  * (asserted equal in OperatorSpec), but ~2 orders of magnitude faster: the
+  * HOF pipeline is interpreted (ArrayTransform/ArrayAggregate have no
+  * doGenCode) and pays per-element lambda dispatch plus a sequence()
+  * allocation per bit, while
   * this is one fused loop of static XXH64 calls inside WholeStageCodegen.
   * That is the difference between sketching 100 TB in one pass and not.
   *
@@ -321,7 +322,7 @@ private[plans] object VecMath {
   * `array_sort(array(struct(-round(graft_cosine(v, c0), 6), 0L), ...))`.
   *
   * Why: `array_sort` is a higher-order function and evaluates
-  * INTERPRETED (CodegenFallback), and annIvfMd5's three consumers each
+  * INTERPRETED (CodegenFallback), and annIvf's three consumers each
   * re-evaluated the whole sorted-array expression per row; the nCells
   * per-centroid literal arrays were also inlined THREE times into the
   * plan, which is what AQE re-canonicalizes on every stage submission.

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.operators.{Clustering, IncrementalAnn, Similarity}
 
 /** Incremental ANN index: the sequential-composition parity contract
-  * (bootstrap + append + query ≡ batch annIvfMd5 under the bootstrap
+  * (bootstrap + append + query ≡ batch annIvf under the bootstrap
   * centroids), the frozen-quantizer rule, the sidecar crash ordering, the
   * one-file-per-bucket append layout, and the one-sided query plan.
   */
@@ -35,7 +35,7 @@ class IncrementalAnnSpec extends SparkSpec {
     df.select(col("q_id"), col("n_id"), col("sim4"), col("rn"))
       .as[(Long, Long, Double, Long)].collect().toSet
 
-  test("bootstrap + append + query equals batch annIvfMd5 under the " +
+  test("bootstrap + append + query equals batch annIvf under the " +
     "bootstrap centroids (sequential-composition parity)") {
     freshIndex("ia_par")
     val boot = vecs(bootIds)
@@ -54,7 +54,7 @@ class IncrementalAnnSpec extends SparkSpec {
       "bootstrap centroids must equal a plain kmeansFit on the bootstrap batch")
     val viaIndex = rows(IncrementalAnn.query(all, "vec_id", "embedding",
       "ia_par", k = 3, nProbe = 2))
-    val viaBatch = rows(Similarity.annIvfMd5(all, "vec_id", "embedding",
+    val viaBatch = rows(Similarity.annIvf(all, "vec_id", "embedding",
       k = 3, nCells = 4, nProbe = 2, fitted = Some(fittedBoot),
       fittedCellCounts = Some(Similarity.ivfCellCounts(
         all, "vec_id", "embedding", fittedBoot))))
@@ -164,7 +164,7 @@ class IncrementalAnnSpec extends SparkSpec {
       "expected the appends to land visible bucket files")
   }
 
-  test("rebuild retrains the quantizer: result equals batch annIvfMd5 " +
+  test("rebuild retrains the quantizer: result equals batch annIvf " +
     "under the NEW full-corpus fit; sidecar and row count follow") {
     freshIndex("ia_rb")
     Seq("ia_rb__rebuild", "ia_rb__old", "ia_rb_centroids__rebuild",
@@ -189,7 +189,7 @@ class IncrementalAnnSpec extends SparkSpec {
     assert(sidecar === newCents.map(_.toSeq).toSeq)
     val viaIndex = rows(IncrementalAnn.query(all, "vec_id", "embedding",
       "ia_rb", k = 3, nProbe = 2))
-    val viaBatch = rows(Similarity.annIvfMd5(all, "vec_id", "embedding",
+    val viaBatch = rows(Similarity.annIvf(all, "vec_id", "embedding",
       k = 3, nCells = 4, nProbe = 2, fitted = Some(newCents),
       fittedCellCounts = Some(Similarity.ivfCellCounts(
         all, "vec_id", "embedding", newCents))))
