@@ -1,6 +1,7 @@
 package graft.sinks
 
-import org.apache.spark.sql.{Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{Dataset, Observation, SaveMode, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
 import org.apache.spark.storage.StorageLevel
 
 /** Per-provider JSONL dumps + combined all-provider dump, gzipped
@@ -8,8 +9,9 @@ import org.apache.spark.storage.StorageLevel
   *
   * Reference semantics kept:
   *  - records are opaque text lines, never parsed (JsonlDump.scala:24-28);
-  *  - each provider's lines are persisted DISK_ONLY and counted once, since
-  *    the data is consumed twice — own dump + all-dump (JsonlDump.scala:29-32);
+  *  - each provider's lines are persisted DISK_ONLY, since the data is
+  *    consumed twice — own dump + all-dump (JsonlDump.scala:29-32) — and
+  *    counted once, by an observed metric on the provider's own write;
   *  - the all-dump is the n-way union (JsonlDump.scala:51);
   *  - a manifest records per-provider counts and the invariant
   *    Σ provider counts = all count (JsonlDump.scala:44-67).
@@ -59,11 +61,16 @@ object JsonlDump {
     }
     try {
 
+    // each provider's count rides its own write as an observed metric:
+    // a separate count() would be one more job per provider (two under
+    // AQE) over data the write already streams
     val counts = perProvider.map { case (provider, ds) =>
-      ds.write.mode(SaveMode.Overwrite)
+      val lines = Observation()
+      ds.observe(lines, count(lit(1)).as("n"))
+        .write.mode(SaveMode.Overwrite)
         .option("compression", "gzip")
         .text(s"${outRoot.stripSuffix("/")}/$provider.jsonl")
-      provider -> ds.count()
+      provider -> lines.get("n").asInstanceOf[Long]
     }
 
     val all = perProvider.values.reduce(_.union(_))

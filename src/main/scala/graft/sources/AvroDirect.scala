@@ -2,16 +2,23 @@ package graft.sources
 
 import java.nio.ByteBuffer
 
+import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 
 import org.apache.avro.{LogicalTypes, Schema}
 import org.apache.avro.file.{CodecFactory, DataFileReader, DataFileStream, DataFileWriter, SeekableInput}
 import org.apache.avro.generic.{GenericData, GenericDatumReader, GenericDatumWriter, GenericRecord}
+import org.apache.avro.util.Utf8
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, SpecializedGetters}
+import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
+import org.apache.spark.sql.classic.InternalRowFrames
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
 
 /** Direct Avro container-file source/sink over `org.apache.avro` (which
@@ -22,43 +29,49 @@ import org.apache.spark.util.SerializableConfiguration
   * (reference `ParquetDump.scala:116`, `SchemaRepair.scala:31,33`).
   *
   * Scale shape:
-  *  - READ parallelism is one task per `splitSize` byte range, with
-  *    ranges aligned to Avro sync blocks at read time (the spark-avro
-  *    split behavior behind reference `ParquetDump.scala:116`): each
-  *    task seeks to the first sync marker at or after its range start
-  *    and reads every block that STARTS inside its range, so a single
-  *    multi-TB container file fans out across the cluster and no record
-  *    is read twice — the standard Hadoop Avro split contract
-  *    (`sync(start)` / `pastSync(end)`);
+  *  - READ splits every file into ≤`splitSize` byte ranges aligned to
+  *    Avro sync blocks at read time (the spark-avro split behavior behind
+  *    reference `ParquetDump.scala:116`): a reader seeks to the first sync
+  *    marker at or after its range start and reads every block that
+  *    STARTS inside its range, so a single multi-TB container file fans
+  *    out across the cluster and no record is read twice — the standard
+  *    Hadoop Avro split contract (`sync(start)` / `pastSync(end)`);
+  *  - small splits are packed, in listing order, into about
+  *    `defaultParallelism` tasks (see [[packSplits]]): many small files
+  *    cost a few tasks, while a split of `splitSize` bytes still gets a
+  *    task of its own;
+  *  - records decode straight into Catalyst's internal rows (raw micros
+  *    for timestamps, raw days for dates, the Avro wire values), so no
+  *    encoder serializer is generated or run per task;
   *  - schema resolution is Avro-native: the FIRST file's schema is the
   *    reader schema, and every other file resolves against it (reordered
   *    fields and defaulted additions are fine — the A1 multi-path merge
   *    contract);
-  *  - WRITE is one container file per partition, written executor-side
-  *    through the broadcast Hadoop conf (the Sitemap F2/H6 pattern), so
-  *    no driver bottleneck and no global sort. Run it with speculative
-  *    execution off (direct write, no output committer) — same contract
-  *    as every executor-side put in graft.sinks.
+  *  - WRITE is one container file per partition of the frame's internal
+  *    rows, written executor-side through the broadcast Hadoop conf (the
+  *    Sitemap F2/H6 pattern), so no driver bottleneck and no global sort.
+  *    Run it with speculative execution off (direct write, no output
+  *    committer) — same contract as every executor-side put in
+  *    graft.sinks.
   */
 object AvroDirect {
 
   // ---------------------------------------------------------------- read
 
   /** Multi-path Avro scan: every `*.avro` under each path (or the path
-    * itself if it is a file), one task per ≤`splitSize` byte range with
-    * sync-block alignment resolved at read time, first file's schema as
-    * the reader schema.
+    * itself if it is a file), cut into ≤`splitSize` byte ranges with
+    * sync-block alignment resolved at read time and packed into about
+    * `defaultParallelism` tasks, first file's schema as the reader schema.
     */
   def read(spark: SparkSession, paths: Seq[String],
       splitSize: Long = DefaultSplitSize): DataFrame = {
     require(paths.nonEmpty, "at least one path required")
     require(splitSize > 0, s"splitSize must be positive, got $splitSize")
-    val hconf = new SerializableConfiguration(
-      spark.sparkContext.hadoopConfiguration)
-    val files = listAvroFiles(hconf.value, paths)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val files = listAvroFiles(conf, paths)
     require(files.nonEmpty,
       s"no .avro files under ${paths.mkString(", ")}")
-    val readerSchema = fileSchema(hconf.value, files.head._1)
+    val readerSchema = fileSchema(conf, files.head._1)
     val schemaJson = readerSchema.toString
     val structType = toCatalyst(readerSchema) match {
       case st: StructType => st
@@ -71,44 +84,95 @@ object AvroDirect {
     // stops once it passes `end`, so a block is owned by exactly the
     // split its first byte falls into — records never duplicate or drop
     // across split boundaries, whatever the block/split size ratio.
-    val splits: Seq[(String, Long, Long)] = files.flatMap { case (f, len) =>
-      if (len == 0) Seq((f, 0L, 0L))
-      else (0L until len by splitSize).map(s => (f, s, math.min(s + splitSize, len)))
+    val splits = files.flatMap { case (f, len) =>
+      if (len == 0) Seq(Split(f, 0L, 0L, 0L))
+      else (0L until len by splitSize).map(s =>
+        Split(f, s, math.min(s + splitSize, len), len))
     }
+    val tasks = packSplits(splits, splitSize,
+      spark.sparkContext.defaultParallelism)
+    val hconf = spark.sparkContext.broadcast(new SerializableConfiguration(conf))
     val rows = spark.sparkContext
-      .parallelize(splits, splits.size)
-      .flatMap { case (file, start, end) =>
+      .parallelize(tasks, tasks.size)
+      .flatMap { task =>
         val expected = new Schema.Parser().parse(schemaJson)
-        val reader = new DataFileReader[GenericRecord](
-          openSeekable(hconf.value, file),
-          new GenericDatumReader[GenericRecord](null, expected))
-        Option(TaskContext.get()).foreach(
-          _.addTaskCompletionListener[Unit](_ => reader.close()))
-        reader.sync(start)
-        val convert = avroToRow(expected, structType)
-        new Iterator[Row] {
-          def hasNext: Boolean = {
-            val h = reader.hasNext && !reader.pastSync(end)
-            if (!h) reader.close()
-            h
-          }
-          def next(): Row = convert(reader.next()).asInstanceOf[Row]
-        }
+        val convert = recordToRow(expected, structType)
+        task.iterator
+          .flatMap(readSplit(hconf.value.value, expected, _))
+          .map(convert)
       }
-    spark.createDataFrame(rows, structType)
+    InternalRowFrames.create(spark, rows, structType)
   }
 
   /** Default split grain, matching Spark's files.maxPartitionBytes. */
   val DefaultSplitSize: Long = 128L * 1024 * 1024
 
-  /** Seekable Hadoop input for [[DataFileReader]] (the split reader needs
-    * seek/tell; avro-mapred's FsInput is not on the core classpath).
+  /** Bytes `[start, end)` of `file`, whose listed length is `fileLen`. */
+  private final case class Split(
+      file: String, start: Long, end: Long, fileLen: Long) {
+    def bytes: Long = end - start
+  }
+
+  /** Groups `splits` into tasks, keeping listing order: a split joins the
+    * current task unless that would push the task past `perTask` bytes.
+    * `perTask` is the smallest cap from ⌈total / parallelism⌉ up to
+    * `splitSize` at which that fill needs at most `parallelism` tasks (the
+    * fill's task count only falls as the cap grows), so small files pack
+    * into about `parallelism` even tasks, and a split of `splitSize` or
+    * more still runs alone.
     */
-  private def openSeekable(conf: Configuration, file: String): SeekableInput = {
+  private def packSplits(splits: Seq[Split], splitSize: Long,
+      parallelism: Int): Seq[Seq[Split]] = {
+    def fill(perTask: Long): Seq[Seq[Split]] = {
+      val tasks = ArrayBuffer(ArrayBuffer.empty[Split])
+      var bytes = 0L
+      splits.foreach { s =>
+        if (tasks.last.nonEmpty && bytes + s.bytes > perTask) {
+          tasks += ArrayBuffer.empty[Split]
+          bytes = 0L
+        }
+        tasks.last += s
+        bytes += s.bytes
+      }
+      tasks.map(_.toSeq).toSeq
+    }
+    val total = splits.map(_.bytes).sum
+    var lo = math.min(splitSize, (total + parallelism - 1) / parallelism)
+    var hi = splitSize
+    while (lo < hi) {
+      val mid = lo + (hi - lo) / 2
+      if (fill(mid).size <= parallelism) hi = mid else lo = mid + 1
+    }
+    fill(lo)
+  }
+
+  /** The records of one split: every block that starts inside it. */
+  private def readSplit(conf: Configuration, schema: Schema,
+      split: Split): Iterator[GenericRecord] = {
+    val reader = new DataFileReader[GenericRecord](
+      openSeekable(conf, split.file, split.fileLen),
+      new GenericDatumReader[GenericRecord](null, schema))
+    Option(TaskContext.get()).foreach(
+      _.addTaskCompletionListener[Unit](_ => reader.close()))
+    reader.sync(split.start)
+    new Iterator[GenericRecord] {
+      def hasNext: Boolean = {
+        val h = reader.hasNext && !reader.pastSync(split.end)
+        if (!h) reader.close()
+        h
+      }
+      def next(): GenericRecord = reader.next()
+    }
+  }
+
+  /** Seekable Hadoop input for [[DataFileReader]] (the split reader needs
+    * seek/tell; avro-mapred's FsInput is not on the core classpath). The
+    * length comes from the driver's listing, not a per-task status call.
+    */
+  private def openSeekable(conf: Configuration, file: String,
+      len: Long): SeekableInput = {
     val path = new Path(file)
-    val fs = path.getFileSystem(conf)
-    val len = fs.getFileStatus(path).getLen
-    val in = fs.open(path)
+    val in = path.getFileSystem(conf).open(path)
     new SeekableInput {
       def read(b: Array[Byte], off: Int, n: Int): Int = in.read(b, off, n)
       def seek(p: Long): Unit = in.seek(p)
@@ -167,29 +231,27 @@ object AvroDirect {
     */
   def write(df: DataFrame, out: String): Unit = {
     val spark = df.sparkSession
-    val avroSchema = toAvro(df.schema, "topLevelRecord")
-    val schemaJson = avroSchema.toString
+    val schemaJson = toAvro(df.schema, "topLevelRecord").toString
     val structType = df.schema
-    val hconf = new SerializableConfiguration(
-      spark.sparkContext.hadoopConfiguration)
+    val conf = spark.sparkContext.hadoopConfiguration
     val outPath = new Path(out)
-    val fs = outPath.getFileSystem(hconf.value)
+    val fs = outPath.getFileSystem(conf)
     if (fs.exists(outPath)) fs.delete(outPath, true)
     fs.mkdirs(outPath)
     val base = outPath.toString
-    df.rdd.foreachPartition { iter =>
+    val hconf = spark.sparkContext.broadcast(new SerializableConfiguration(conf))
+    df.queryExecution.toRdd.foreachPartition { iter =>
       val idx = TaskContext.getPartitionId()
       if (iter.nonEmpty || idx == 0) {
         val schema = new Schema.Parser().parse(schemaJson)
-        val convert = rowToAvro(structType, schema)
+        val convert = rowToRecord(structType, schema)
         val file = new Path(f"$base/part-$idx%05d.avro")
-        val os = file.getFileSystem(hconf.value).create(file, true)
+        val os = file.getFileSystem(hconf.value.value).create(file, true)
         val writer = new DataFileWriter[GenericRecord](
           new GenericDatumWriter[GenericRecord](schema))
         writer.setCodec(CodecFactory.snappyCodec())
         writer.create(schema, os)
-        try iter.foreach(r =>
-          writer.append(convert(r).asInstanceOf[GenericRecord]))
+        try iter.foreach(r => writer.append(convert(r)))
         finally writer.close()
       }
     }
@@ -299,135 +361,152 @@ object AvroDirect {
     path.replaceAll("[^A-Za-z0-9_]", "_")
 
   // -------------------------------------------------- value conversion
+  //
+  // Both directions work on Catalyst's internal values, which for the
+  // logical types are the Avro wire values themselves: a timestamp is
+  // micros since the epoch (a `timestamp-millis` long is scaled, failing
+  // on overflow) and a date is days since the epoch, with no calendar
+  // conversion on either side.
 
-  /** Converter Avro runtime value → Catalyst external value, built once
-    * per task from the (avro, catalyst) schema pair — the Avro side is
-    * needed to distinguish micros/millis timestamps, which the Catalyst
-    * type alone cannot.
+  /** Converter Avro record → Catalyst internal row, built once per task
+    * from the (Avro, Catalyst) schema pair — the Avro side is needed to
+    * tell micros from millis timestamps, which the Catalyst type alone
+    * cannot. Fields are looked up by Avro field position.
     */
-  private def avroToRow(s: Schema, dt: DataType): Any => Any = {
-    val (base, _) = unwrap(s)
-    (base.getType, dt) match {
-      case (Schema.Type.RECORD, st: StructType) =>
-        val converters = st.fields.map { f =>
-          val avroField = base.getField(f.name)
-          (f.name, avroToRow(avroField.schema, f.dataType))
-        }
-        v =>
-          if (v == null) null
-          else {
-            val rec = v.asInstanceOf[GenericRecord]
-            Row.fromSeq(converters.toSeq.map {
-              case (name, c) => c(rec.get(name))
-            })
-          }
-      case (Schema.Type.ARRAY, ArrayType(et, _)) =>
-        val c = avroToRow(base.getElementType, et)
-        v =>
-          if (v == null) null
-          else v.asInstanceOf[java.util.Collection[_]].asScala.map(c).toSeq
-      case (Schema.Type.MAP, MapType(_, vt, _)) =>
-        val c = avroToRow(base.getValueType, vt)
-        v =>
-          if (v == null) null
-          else v.asInstanceOf[java.util.Map[_, _]].asScala.map {
-            case (k, x) => k.toString -> c(x)
-          }.toMap
-      case (Schema.Type.LONG, TimestampType) =>
-        val millis = logicalName(base) == "timestamp-millis"
-        v =>
-          if (v == null) null
-          else {
-            val micros =
-              if (millis) v.asInstanceOf[Long] * 1000L
-              else v.asInstanceOf[Long]
-            val ts = new java.sql.Timestamp(Math.floorDiv(micros, 1000000L) * 1000L)
-            ts.setNanos((Math.floorMod(micros, 1000000L) * 1000L).toInt)
-            ts
-          }
-      case (Schema.Type.INT, DateType) =>
-        v =>
-          if (v == null) null
-          else java.sql.Date.valueOf(
-            java.time.LocalDate.ofEpochDay(v.asInstanceOf[Int].toLong))
-      case (_, StringType) =>
-        v => if (v == null) null else v.toString
-      case (_, BinaryType) =>
-        {
-          case null => null
-          case b: ByteBuffer =>
-            val a = new Array[Byte](b.remaining()); b.duplicate().get(a); a
-          case f: GenericData.Fixed => f.bytes().clone()
-          case other => other
-        }
-      case _ => identity[Any]
+  private def recordToRow(s: Schema, st: StructType): GenericRecord => InternalRow = {
+    val fields = st.fields.map { f =>
+      val avroField = s.getField(f.name)
+      (avroField.pos, fromAvro(avroField.schema, f.dataType))
+    }
+    rec => {
+      val values = new Array[Any](fields.length)
+      var i = 0
+      while (i < fields.length) {
+        values(i) = fields(i)._2(rec.get(fields(i)._1))
+        i += 1
+      }
+      new GenericInternalRow(values)
     }
   }
 
-  /** Converter Catalyst external value (Row tree) → Avro runtime value.
-    * Timestamps are written as micros (matching [[toAvro]]).
-    */
-  private def rowToAvro(dt: DataType, s: Schema): Any => Any = {
+  /** Converter Avro runtime value → Catalyst internal value. */
+  private def fromAvro(s: Schema, dt: DataType): AnyRef => Any = {
     val (base, _) = unwrap(s)
-    dt match {
-      case st: StructType =>
-        val converters = st.fields.zipWithIndex.map { case (f, i) =>
-          (i, f.name, rowToAvro(f.dataType, base.getField(f.name).schema))
+    val convert: AnyRef => Any = (base.getType, dt) match {
+      case (Schema.Type.RECORD, st: StructType) =>
+        val toRow = recordToRow(base, st)
+        v => toRow(v.asInstanceOf[GenericRecord])
+      case (Schema.Type.ARRAY, ArrayType(et, _)) =>
+        val c = fromAvro(base.getElementType, et)
+        v => new GenericArrayData(
+          v.asInstanceOf[java.util.Collection[AnyRef]].asScala.map(c).toArray)
+      case (Schema.Type.MAP, MapType(_, vt, _)) =>
+        val c = fromAvro(base.getValueType, vt)
+        v => {
+          val m = v.asInstanceOf[java.util.Map[AnyRef, AnyRef]]
+          val keys = new Array[Any](m.size)
+          val values = new Array[Any](m.size)
+          var i = 0
+          m.forEach { (k, x) =>
+            keys(i) = utf8(k)
+            values(i) = c(x)
+            i += 1
+          }
+          new ArrayBasedMapData(new GenericArrayData(keys),
+            new GenericArrayData(values))
         }
-        v =>
-          if (v == null) null
-          else {
-            val row = v.asInstanceOf[Row]
-            val rec = new GenericData.Record(base)
-            converters.foreach { case (i, name, c) =>
-              rec.put(name, c(row.get(i)))
-            }
-            rec
-          }
-      case ArrayType(et, _) =>
-        val c = rowToAvro(et, base.getElementType)
-        v =>
-          if (v == null) null
-          else {
-            val out = new java.util.ArrayList[Any]()
-            v.asInstanceOf[scala.collection.Seq[_]].foreach(x => out.add(c(x)))
-            out
-          }
-      case MapType(StringType, vt, _) =>
-        val c = rowToAvro(vt, base.getValueType)
-        v =>
-          if (v == null) null
-          else {
-            val out = new java.util.HashMap[String, Any]()
-            v.asInstanceOf[scala.collection.Map[_, _]].foreach {
-              case (k, x) => out.put(k.toString, c(x))
-            }
-            out
-          }
-      case TimestampType =>
-        v =>
-          if (v == null) null
-          else {
-            val ts = v.asInstanceOf[java.sql.Timestamp]
-            Math.addExact(
-              Math.multiplyExact(Math.floorDiv(ts.getTime, 1000L), 1000000L),
-              (ts.getNanos / 1000).toLong)
-          }
-      case DateType =>
-        v =>
-          if (v == null) null
-          else v.asInstanceOf[java.sql.Date].toLocalDate.toEpochDay.toInt
-      case BinaryType =>
-        v => if (v == null) null else ByteBuffer.wrap(v.asInstanceOf[Array[Byte]])
-      case ByteType | ShortType =>
-        // toAvro maps these to Avro INT, and Avro's union resolution is
-        // `instanceof Integer` — a raw java.lang.Byte/Short in a
-        // [null,int] union throws UnresolvedUnionException on every
-        // non-null row (review finding); widen at write time
-        v =>
-          if (v == null) null
-          else Integer.valueOf(v.asInstanceOf[Number].intValue())
+      case (Schema.Type.LONG, TimestampType)
+          if logicalName(base) == "timestamp-millis" =>
+        v => Math.multiplyExact(v.asInstanceOf[java.lang.Long].longValue, 1000L)
+      case (_, StringType) => utf8
+      case (Schema.Type.BYTES, BinaryType) =>
+        v => {
+          val b = v.asInstanceOf[ByteBuffer]
+          val a = new Array[Byte](b.remaining())
+          b.duplicate().get(a)
+          a
+        }
+      case (Schema.Type.FIXED, BinaryType) =>
+        v => v.asInstanceOf[GenericData.Fixed].bytes().clone()
       case _ => identity[Any]
     }
+    v => if (v == null) null else convert(v)
+  }
+
+  /** Avro string or enum symbol → UTF8String (a decoded Utf8 is wrapped,
+    * not re-encoded: the reader hands out a fresh buffer per record).
+    */
+  private def utf8(v: AnyRef): UTF8String = v match {
+    case u: Utf8 => UTF8String.fromBytes(u.getBytes, 0, u.getByteLength)
+    case other => UTF8String.fromString(other.toString)
+  }
+
+  /** Converter Catalyst internal row → Avro record, the inverse of
+    * [[recordToRow]] over a [[toAvro]] schema.
+    */
+  private def rowToRecord(st: StructType, s: Schema): InternalRow => GenericRecord = {
+    val fields = st.fields.map { f =>
+      val avroField = s.getField(f.name)
+      (avroField.pos, toAvroValue(f.dataType, avroField.schema))
+    }
+    row => {
+      val rec = new GenericData.Record(s)
+      var i = 0
+      while (i < fields.length) {
+        rec.put(fields(i)._1, fields(i)._2(row, i))
+        i += 1
+      }
+      rec
+    }
+  }
+
+  /** Converter for slot `i` of a Catalyst row or array → Avro runtime
+    * value.
+    */
+  private def toAvroValue(dt: DataType, s: Schema): (SpecializedGetters, Int) => Any = {
+    val (base, _) = unwrap(s)
+    val convert: (SpecializedGetters, Int) => Any = dt match {
+      case st: StructType =>
+        val toRecord = rowToRecord(st, base)
+        (g, i) => toRecord(g.getStruct(i, st.length))
+      case ArrayType(et, _) =>
+        val c = toAvroValue(et, base.getElementType)
+        (g, i) => {
+          val a = g.getArray(i)
+          val out = new java.util.ArrayList[Any](a.numElements())
+          var j = 0
+          while (j < a.numElements()) {
+            out.add(c(a, j))
+            j += 1
+          }
+          out
+        }
+      case MapType(StringType, vt, _) =>
+        val c = toAvroValue(vt, base.getValueType)
+        (g, i) => {
+          val m = g.getMap(i)
+          val keys = m.keyArray()
+          val values = m.valueArray()
+          val out = new java.util.HashMap[Utf8, Any]()
+          var j = 0
+          while (j < m.numElements()) {
+            out.put(new Utf8(keys.getUTF8String(j).getBytes), c(values, j))
+            j += 1
+          }
+          out
+        }
+      case StringType => (g, i) => new Utf8(g.getUTF8String(i).getBytes)
+      case BinaryType => (g, i) => ByteBuffer.wrap(g.getBinary(i))
+      // toAvro maps these to Avro INT, and Avro's union resolution is
+      // `instanceof Integer` — a raw java.lang.Byte/Short in a [null,int]
+      // union throws UnresolvedUnionException on every non-null row
+      // (review finding); widen at write time
+      case ByteType => (g, i) => Integer.valueOf(g.getByte(i).toInt)
+      case ShortType => (g, i) => Integer.valueOf(g.getShort(i).toInt)
+      // boolean, int, long, float, double; a date's days and a
+      // timestamp's micros are already the Avro values
+      case other => InternalRow.getAccessor(other, nullable = false)
+    }
+    (g, i) => if (g.isNullAt(i)) null else convert(g, i)
   }
 }

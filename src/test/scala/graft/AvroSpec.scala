@@ -2,6 +2,9 @@ package graft
 
 import java.sql.{Date, Timestamp}
 
+import org.apache.avro.Schema
+import org.apache.avro.file.{DataFileReader, DataFileWriter}
+import org.apache.avro.generic.{GenericData, GenericDatumReader, GenericDatumWriter, GenericRecord}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -76,7 +79,7 @@ class AvroSpec extends SparkSpec {
     // toAvro maps ByteType|ShortType to INT, but Avro's [null,int] union
     // resolution is `instanceof Integer` — a raw java.lang.Byte/Short
     // threw UnresolvedUnionException on every non-null row until
-    // rowToAvro widened them at write time (review finding). Reads come
+    // the write converter widened them (review finding). Reads come
     // back as IntegerType (the declared Avro type), values intact.
     val schema = StructType(Seq(
       StructField("id", LongType, nullable = false),
@@ -157,13 +160,86 @@ class AvroSpec extends SparkSpec {
     assert(back.schema === schema)
   }
 
-  test("read parallelism is one task per file") {
+  test("read packs small splits into at most defaultParallelism tasks") {
     import spark.implicits._
     val out = tmpDir()
     AvroDirect.write((1L to 100L).toDF("id").repartition(4), out)
     val back = AvroDirect.read(spark, Seq(out))
     assert(back.rdd.getNumPartitions === 4)
     assert(back.agg(sum("id")).head.getLong(0) === 5050L)
+  }
+
+  test("8 small files on local[4] pack into 4 tasks with every record read once") {
+    import spark.implicits._
+    assert(spark.sparkContext.defaultParallelism === 4)
+    val out = tmpDir()
+    AvroDirect.write((1L to 800L).toDF("id").repartition(8), out)
+    assert(new java.io.File(out).listFiles
+      .count(_.getName.endsWith(".avro")) === 8)
+    val back = AvroDirect.read(spark, Seq(out))
+    assert(back.rdd.getNumPartitions === 4)
+    assert(back.count() === 800L)
+    assert(back.agg(sum("id")).head.getLong(0) === 800L * 801L / 2)
+  }
+
+  test("pre-1582 DATE and TIMESTAMP round-trip unchanged, stored as raw days and micros") {
+    // Avro's date / timestamp-micros are days / micros since the epoch on
+    // the proleptic Gregorian calendar, which is Catalyst's own internal
+    // value: no hybrid-calendar rebase on either side
+    val df = spark.sql("SELECT 1L AS id, DATE'1000-03-01' AS day, " +
+      "TIMESTAMP'1000-03-01 12:34:56.123456' AS ts")
+    val out = tmpDir()
+    AvroDirect.write(df, out)
+    val raw = Seq("unix_date(day) AS day", "unix_micros(ts) AS ts")
+    val want = df.selectExpr(raw: _*).head()
+    val back = AvroDirect.read(spark, Seq(out))
+    assert(back.schema === df.schema)
+    assert(back.selectExpr(raw: _*).head() === want)
+    val file = new java.io.File(out).listFiles
+      .filter(_.getName.endsWith(".avro")).head
+    val reader = new DataFileReader[GenericRecord](file,
+      new GenericDatumReader[GenericRecord]())
+    val rec = try reader.next() finally reader.close()
+    assert(rec.get("day") === java.time.LocalDate.of(1000, 3, 1).toEpochDay.toInt)
+    assert(rec.get("ts") === want.getLong(1))
+  }
+
+  /** One record written with plain Avro (no AvroDirect on the write side):
+    * a `timestamp-millis` long and an enum.
+    */
+  private def writeMillisEnumFile(millis: Long): String = {
+    val schema = new Schema.Parser().parse(
+      """{"type": "record", "name": "r", "fields": [
+        |  {"name": "ts", "type": {"type": "long", "logicalType": "timestamp-millis"}},
+        |  {"name": "color", "type": {"type": "enum", "name": "Color", "symbols": ["RED", "GREEN"]}}
+        |]}""".stripMargin)
+    val rec = new GenericData.Record(schema)
+    rec.put("ts", millis)
+    rec.put("color", new GenericData.EnumSymbol(schema.getField("color").schema, "GREEN"))
+    val out = tmpDir()
+    val writer = new DataFileWriter[GenericRecord](
+      new GenericDatumWriter[GenericRecord](schema))
+    writer.create(schema, new java.io.File(out, "part-00000.avro"))
+    try writer.append(rec) finally writer.close()
+    out
+  }
+
+  test("a plain-Avro timestamp-millis long and enum decode to the same instant and string") {
+    val millis = 1700000000123L
+    val back = AvroDirect.read(spark, Seq(writeMillisEnumFile(millis)))
+    assert(back.schema === StructType(Seq(
+      StructField("ts", TimestampType, nullable = false),
+      StructField("color", StringType, nullable = false))))
+    val got = back.selectExpr("unix_micros(ts)", "color").head()
+    assert(got.getLong(0) === millis * 1000L)
+    assert(got.getString(1) === "GREEN")
+  }
+
+  test("an out-of-range timestamp-millis value fails loudly instead of wrapping") {
+    val out = writeMillisEnumFile(Long.MaxValue / 100)
+    val e = intercept[Exception](AvroDirect.read(spark, Seq(out)).collect())
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(_.isInstanceOf[ArithmeticException]), e)
   }
 
   test("one multi-block container file splits on sync blocks across >1 task") {

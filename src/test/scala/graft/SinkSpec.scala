@@ -146,6 +146,50 @@ class SinkSpec extends SparkSpec {
       .contains("Count.all: 3"))
   }
 
+  test("jsonl dump counts each provider on its own write: 3 providers run 4 jobs") {
+    import spark.implicits._
+    val src = tmpDir()
+    val lines = Map("p1" -> 3, "p2" -> 1, "p3" -> 5)
+    for ((p, n) <- lines)
+      (1 to n).map(i => s"""{"$p":$i}""").toDS().coalesce(1).write.text(s"$src/$p")
+    val out = tmpDir()
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some("jsonl-dump") => jobs.incrementAndGet()
+          case Some("jsonl-drain") => drained.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    val res = try {
+      sc.setJobGroup("jsonl-dump", "jsonl dump")
+      val res = try JsonlDump.dump(spark,
+        lines.map { case (p, _) => p -> s"$src/$p" }, out, "2026-10-18")
+      finally sc.clearJobGroup()
+      // listener events arrive in posting order: once this marker job's
+      // start is seen, every job of the dump has been counted
+      sc.setJobGroup("jsonl-drain", "listener drain")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      res
+    } finally sc.removeSparkListener(listener)
+    // one write per provider (its count an observed metric) + the all-dump
+    assert(jobs.get === 4)
+    val manifest = Manifest.read(sc.hadoopConfiguration, out).linesIterator.toSet
+    for ((p, n) <- lines) {
+      val written = spark.read.text(s"$out/$p.jsonl").count()
+      assert(written === n.toLong)
+      assert(res.providerCounts(p) === written)
+      assert(manifest.contains(s"Count.$p: $written"))
+    }
+    assert(manifest.contains("Count.all: 9"))
+  }
+
   test("jsonl dump refuses a provider named 'all' (combined-dump collision)") {
     // <outRoot>/all.jsonl is the combined dump's path and Count.all its
     // manifest key — a provider directory literally named "all" would be
