@@ -1,10 +1,9 @@
 package graft
 
-/** Host load / contention probes shared by [[Bench]] and the rehearsal
-  * drivers ([[ScaleRehearsal]]'s gated legs — ADVICE r12: the skew leg's
-  * wall-clock gate needs the same contention evidence Bench records, or a
-  * co-tenant burst makes it pass or fail spuriously on this ~1.7×-swinging
-  * shared host).
+/** Host load / contention probes shared by perfbench (recorded next to
+  * every timed round) and [[ScaleRehearsal]]'s gated legs: a wall-clock
+  * gate needs contention evidence, or a co-tenant burst on a shared host
+  * makes it pass or fail spuriously.
   *
   * All probes are read-only procfs reads or a bounded spin; each returns a
   * sentinel (-1) instead of throwing on a non-Linux / unreadable host so

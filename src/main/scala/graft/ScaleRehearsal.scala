@@ -20,8 +20,7 @@ import org.apache.spark.sql.functions._
   * Usage: runMain graft.ScaleRehearsal [sfDir] [blowup] [outDir] [legs]
   * `legs` is a comma list filtering which legs run (curate, pipeline,
   * spans, heavy, entropy, winnow, vector, iann, ivfpqp, events, dq,
-  * delta, skew); default "all". Prints one JSON line, mirroring the
-  * Bench contract.
+  * delta, skew); default "all". Prints one JSON line.
   */
 object ScaleRehearsal {
 
@@ -90,7 +89,7 @@ object ScaleRehearsal {
       .orderBy(col("doc_id")).limit(30)
       .select(col("doc_id"), col("text"))
 
-    // plain Double interpolation (the Bench contract): an f"%.1f" render
+    // plain Double interpolation, not f"%.1f": an f-interpolated render
     // is default-locale-dependent and a comma-decimal locale would emit
     // invalid JSON
     def r1(x: Double): Double = math.round(x * 10.0) / 10.0

@@ -18,7 +18,7 @@ object Verify {
       .config("spark.ui.enabled", "false")
       // the listener bus renders an explain string per action even with
       // the UI off; simple mode + a cap keeps that tax off the driver
-      // path (measured via JobProfile stack samples: Literal.toString /
+      // path (measured via driver stack samples: Literal.toString /
       // truncatedString frames during job gaps)
       .config("spark.sql.ui.explainMode", "simple")
       .config("spark.sql.maxPlanStringLength", "1024")

@@ -472,14 +472,10 @@ object Curation {
     // gate (the page gate must see the raw page); fingerprints/shingles
     // then dedup the RETAINED content, so under c4 the shingles must
     // re-tokenize the rewritten text — only the c4-off path reuses __tk.
-    // min_by(full-row struct, id) is the keeper: deterministic because
-    // idCol is unique (precondition above), partial-aggregable so
-    // duplicate classes collapse map-side before the exchange. The round-8
-    // A/B that measured min_by-of-struct slightly slower (2.62 vs 2.29 s)
-    // compared three FULL-ROW-SHUFFLE shapes inside the old five-action
-    // architecture; here the struct agg REPLACES an entire
-    // checkpoint-action (write full rows, then re-aggregate narrow), and
-    // the end-to-end row wins (1.82 → 1.4 s same-sitting at sf0.1).
+    // The keeper is [[Dedup.keeperRows]] (min_by(full-row struct, id)):
+    // deterministic because idCol is unique (precondition above),
+    // partial-aggregable so duplicate classes collapse map-side before
+    // the exchange, and it quotes every column, so dotted names pass.
     val shingled = (if (cfg.c4)
         quality.withColumn(textCol, TextAnalysis.c4CleanLines(col(textCol)))
           .withColumn("__sh",
@@ -487,11 +483,7 @@ object Curation {
       else quality.withColumn("__sh", TextAnalysis.shingles(col("__tk"))))
       .withColumn("__fp", TextAnalysis.fingerprint(col(textCol)))
       .drop("__tk")
-    val keepers = shingled
-      .groupBy(col("__fp"))
-      .agg(min_by(struct(shingled.columns.filter(_ != "__fp")
-        .map(col).toIndexedSeq: _*), col(idCol)).as("__r"))
-      .select(col("__r.*"))
+    val keepers = Dedup.keeperRows(shingled, idCol).drop("__fp")
       .localCheckpoint()
     // Decontamination applies lazily to the LSH signature input below —
     // sound ordering per the scaladoc (exact dedup commutes with

@@ -89,9 +89,8 @@ object IncrementalAnn {
     * non-bootstrap append the caller MUST pass the value a prior
     * append/bootstrap for THIS index returned — anything else silently
     * assigns the batch under a different quantizer than the index's
-    * earlier rows (the same trust contract as annIvf's
-    * `fittedCellCounts`); when in doubt, omit it and pay the sidecar
-    * read. The spec pins fitted-path ≡ sidecar-read-path equivalence.
+    * earlier rows; when in doubt, omit it and pay the sidecar read. The
+    * spec pins fitted-path ≡ sidecar-read-path equivalence.
     */
   def append(
       batch: DataFrame,

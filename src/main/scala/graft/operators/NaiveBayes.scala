@@ -19,9 +19,8 @@ import org.apache.spark.sql.functions._
   * membership probe.
   *
   * Fit and apply are SEPARATE entry points (like QualityClassifier and
-  * the fitted-BPE/PQ tables) so callers can memoize the fitted `Model` —
-  * the fit runs three bounded collect actions, which dominate wall time
-  * when the same corpus is scored repeatedly.
+  * the fitted-BPE/PQ tables) so one fitted `Model` can score several
+  * frames — the fit runs three bounded collect actions.
   *
   * Scores are rounded to 4 decimals before the argmax and ties break
   * toward the LARGER label string (array_max struct order) — both

@@ -52,7 +52,7 @@ object Packing {
     *
     * Cache lifecycle: in strict mode the joined frame stays persisted
     * after return (the result is lazy). Long-running sessions should
-    * `spark.catalog.clearCache()` between workloads (Bench does).
+    * `spark.catalog.clearCache()` between workloads.
     */
   def materializeBins(
       bins: Dataset[PackedBin],

@@ -119,15 +119,15 @@ object PageRank {
     // 16 B ≈ 16 MB) iterates with EXPLICIT broadcast hints on the rank
     // and contribution sides and AQE disabled for the loop's internal
     // actions. Rationale: AQE's per-stage replanning dominated the row's
-    // wall on fixture-scale graphs (JobProfile: 1.38 s of a 2.63 s wall
+    // wall on fixture-scale graphs (profiled: 1.38 s of a 2.63 s wall
     // in withFinalPlanUpdate across 24 jobs — each tiny round replanned
     // 3-4 stages to conclude what the hint states up front), and a
     // checkpointed rank frame never benefits from runtime re-planning at
     // this size. Large graphs keep the AQE shuffle-iterate path
     // untouched — there the rank exchange is real data movement AQE
     // should size. The conf flip is scoped to the loop (the driver owns
-    // the session during an iterative fit — the ConnectedComponents /
-    // Bench sequential-execution contract) and restored in finally; the
+    // the session during an iterative fit — the ConnectedComponents
+    // sequential-execution contract) and restored in finally; the
     // RETURNED frame is checkpoint blocks, so callers plan against it
     // under their own conf.
     val spark = edges.sparkSession

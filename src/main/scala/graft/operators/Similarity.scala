@@ -33,8 +33,7 @@ import graft.functions.VectorFunctions._
   * localCheckpoint because it feeds a cap-count plus both self-join sides;
   * the returned DataFrame is lazy, so the operator cannot know when to
   * release the blocks. Long-running sessions interleaving unrelated heavy
-  * work should `spark.catalog.clearCache()` between workloads (graft.Bench
-  * does exactly this between timed runs).
+  * work should `spark.catalog.clearCache()` between workloads.
   */
 object Similarity {
 
@@ -329,30 +328,6 @@ object Similarity {
       .filter(col("sim4") >= threshold)
   }
 
-  /** The IVF index's inverted-list DIRECTORY: per-cell member counts under
-    * the given centroids — the other half of a real IVF index alongside
-    * the centroid table (list sizes are what a probe planner consults).
-    * One narrow pass (assignment kernel → 8-ish-group count → bounded
-    * collect of ≤ nCells rows); fit-time callers memoize it with the
-    * centroids so [[annIvf]]'s `maxCellSize` gate costs the QUERY
-    * nothing (the r12 verdict's "three overlapped single-task scans" —
-    * the third scan was exactly this histogram recomputed per query).
-    */
-  def ivfCellCounts(
-      df: DataFrame,
-      idCol: String,
-      vecCol: String,
-      centroids: Array[Array[Double]]): Map[Long, Long] = {
-    graft.plans.GraftFunctions.register(df.sparkSession)
-    val centStr = centroids.map(_.mkString(",")).mkString(";")
-    spreadIfNarrow(df.filter(col(vecCol).isNotNull))
-      .select(element_at(call_function("graft_ivf_cells",
-        graft.functions.VectorFunctions.asDouble(col(vecCol)),
-        lit(centStr)), 1).getField("c").as("cell"))
-      .groupBy(col("cell")).agg(count(lit(1)).as("n"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-  }
-
   /** IVF ANN with a fully DETERMINISTIC, cross-engine-replayable chain
     * ([EXT]): centroids are the md5-seeded k-means fit (the oracled
     * q_kmeans fit — Clustering.kmeansFit), each vector is assigned to its
@@ -369,10 +344,8 @@ object Similarity {
     * Scale shape: the fit is the k·dim literal-table pass (corpus never
     * shuffles); assignment/probing are narrow kernel passes; the
     * candidate join is cell-keyed with `maxCellSize` failing closed on
-    * degenerate fits — against the fitted directory (`fittedCellCounts`,
-    * one histogram pass at fit time) the gate is a driver-side isin
-    * filter, otherwise an inline count + broadcast join. Ids are assumed
-    * unique (the usual vector-index contract).
+    * degenerate fits (an inline per-cell count + broadcast join). Ids are
+    * assumed unique (the usual vector-index contract).
     */
   def annIvf(
       df: DataFrame,
@@ -383,14 +356,10 @@ object Similarity {
       iters: Int = 2,
       nProbe: Int = 2,
       maxCellSize: Int = 10000,
-      fitted: Option[Array[Array[Double]]] = None,
-      fittedCellCounts: Option[Map[Long, Long]] = None): DataFrame = {
+      fitted: Option[Array[Array[Double]]] = None): DataFrame = {
     require(k >= 1, s"k must be positive, got $k")
     require(nProbe >= 1 && nProbe <= nCells,
       s"nProbe out of [1, $nCells]: $nProbe")
-    require(fittedCellCounts.isEmpty || fitted.nonEmpty,
-      "fittedCellCounts without fitted centroids: the directory is only " +
-        "valid under the centroids it was counted with")
     graft.plans.GraftFunctions.register(df.sparkSession)
     val centroids = fitted.getOrElse(
       Clustering.kmeansFit(df, idCol, vecCol, nCells, iters))
@@ -403,12 +372,12 @@ object Similarity {
     // parity property (no shadow copy here to drift).
     // NOT checkpointed (unlike the md5-fold LSH sketch): the sorted
     // cell array is nCells cheap codegen cosines per row, and its
-    // consumers (two with a fitted directory: corpus assignment and
-    // probes; three otherwise) each materialize `cell` at a
-    // projection/exchange boundary (argmax element, generator input,
-    // group key) — never per candidate pair. Re-evaluating the subtree
-    // per consumer inside one job is cheaper than a checkpoint
-    // materialization job + wait (profiled: 1.8 s → 1.1 s at sf0.1).
+    // three consumers (corpus assignment, cell gate, probes) each
+    // materialize `cell` at a projection/exchange boundary (argmax
+    // element, generator input, group key) — never per candidate pair.
+    // Re-evaluating the subtree per consumer inside one job is cheaper
+    // than a checkpoint materialization job + wait (profiled: 1.8 s →
+    // 1.1 s at sf0.1).
     // r12 re-A/B on the narrower (id, __v) frame alone: 1.35 s with the
     // checkpoint vs 1.31 s without, same sitting — still no gain; the
     // scan is cheap and fully overlapped by AQE's independent stages.
@@ -424,23 +393,13 @@ object Similarity {
       call_function("graft_ivf_cells", col("__v"), lit(centStr)))
     val assigned = base.select(col(idCol).as("n_id"), col("__v").as("n_vec"),
       element_at(col("__cells"), 1).getField("c").as("cell"))
-    // maxCellSize gate: with a fitted directory (ivfCellCounts, memoized
-    // at fit time with the centroids) the kept-cell set is a DRIVER-side
-    // constant — an isin filter (or nothing, when every cell fits), no
-    // second corpus scan, no count aggregate, no broadcast build inside
-    // the query. Without one, the histogram subtree runs inline as before.
-    val corpus = fittedCellCounts match {
-      case Some(counts) =>
-        val kept = counts.filter(_._2 <= maxCellSize).keys.toSeq.sorted
-        if (kept.size == counts.size) assigned
-        else assigned.filter(col("cell").isin(kept: _*))
-      case None =>
-        val keptCells = assigned.groupBy(col("cell"))
-          .agg(count(lit(1)).as("__n"))
-          .filter(col("__n") <= maxCellSize)
-          .select(col("cell"))
-        assigned.join(broadcast(keptCells), "cell")
-    }
+    // maxCellSize gate: the per-cell histogram runs inline and the kept
+    // cells join back as a broadcast
+    val keptCells = assigned.groupBy(col("cell"))
+      .agg(count(lit(1)).as("__n"))
+      .filter(col("__n") <= maxCellSize)
+      .select(col("cell"))
+    val corpus = assigned.join(broadcast(keptCells), "cell")
     val probes = base.select(col(idCol).as("q_id"), col("__v").as("q_vec"),
       explode(slice(col("__cells"), 1, nProbe)).as("p"))
       .select(col("q_id"), col("q_vec"), col("p").getField("c").as("cell"))

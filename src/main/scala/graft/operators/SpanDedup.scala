@@ -37,12 +37,8 @@ object SpanDedup {
     * A zero-exchange map stage: the codegen shingle kernel builds the
     * gram array in one pass and posexplode numbers the positions —
     * no window, so the token stream never shuffles by document.
-    * Public so a caller running several span queries over the SAME corpus
-    * can localCheckpoint this once and pass it to [[sharedSpans]] /
-    * [[spanContamination]] via `seeded` — the seed scan is the pipeline's
-    * tokenize-everything stage and dominates repeat-run cost.
     */
-  def seeds(df: DataFrame, textCol: String, idCol: String,
+  private def seeds(df: DataFrame, textCol: String, idCol: String,
       l: Int): DataFrame = {
     val toks = TextAnalysis.tokens(col(textCol))
     Similarity.spreadIfNarrow(df.filter(col(textCol).isNotNull))
@@ -67,8 +63,7 @@ object SpanDedup {
       idCol: String,
       l: Int = 5,
       minSpan: Int = 8,
-      maxDf: Int = 50,
-      seeded: Option[DataFrame] = None): DataFrame = {
+      maxDf: Int = 50): DataFrame = {
     require(l >= 2 && l <= 50, s"seed length l must be in [2, 50], got $l")
     require(minSpan >= l, s"minSpan ($minSpan) must be >= l ($l)")
     require(maxDf >= 2, s"maxDf must be >= 2, got $maxDf")
@@ -76,10 +71,7 @@ object SpanDedup {
     // from a LogicalRDD (AQE coalescing applies — the cached-relation
     // variant kept 32-task stages on megabytes), and the pair join's two
     // sides read blocks instead of racing the cache's first-touch lock.
-    // `seeded` hands in an ALREADY-CHECKPOINTED [[seeds]] frame (same
-    // df/textCol/idCol/l — the caller owns that contract) so several
-    // span queries over one corpus tokenize it once.
-    val s = seeded.getOrElse(seeds(df, textCol, idCol, l).localCheckpoint())
+    val s = seeds(df, textCol, idCol, l).localCheckpoint()
     // document-frequency cap BEFORE pairing: a gram in > maxDf docs is
     // boilerplate and would contribute O(df²) pair rows. The lower bound
     // is free correctness-preserving pruning: a df=1 gram can only pair a
@@ -186,9 +178,8 @@ object SpanDedup {
       idCol: String,
       l: Int = 5,
       minSpan: Int = 8,
-      maxDf: Int = 50,
-      seeded: Option[DataFrame] = None): DataFrame = {
-    val pairs = sharedSpans(df, textCol, idCol, l, minSpan, maxDf, seeded)
+      maxDf: Int = 50): DataFrame = {
+    val pairs = sharedSpans(df, textCol, idCol, l, minSpan, maxDf)
     // both directions via ONE explode, not a self-union: a union of two
     // selects over `pairs` references the (unpersisted) span plan twice
     // and evaluates the whole seed join + window chain twice with it

@@ -34,14 +34,13 @@ object UnigramLm {
       .limit(vocabSize)
 
   /** A fitted unigram model: the serialized per-token NLL table for the
-    * `graft_map_sum` codegen kernel. Pure data (no session references) —
-    * safe to memoize JVM-wide per fixture dir, like the LR/NB models.
+    * `graft_map_sum` codegen kernel. Pure data (no session references).
     * `None` from [[fitUnigram]] means the corpus had no tokens.
     */
   final case class UniModel(table: String)
 
   /** A fitted interpolated-bigram model: the two premultiplied score
-    * tables for the `graft_bigram_nll` kernel. Pure data, memoizable.
+    * tables for the `graft_bigram_nll` kernel. Pure data.
     */
   final case class BiModel(biTable: String, uniTable: String)
 

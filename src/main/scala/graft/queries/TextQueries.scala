@@ -1008,20 +1008,23 @@ object TextQueries {
     }),
 
     // Naive-Bayes lang classifier, ORACLED: fit on the labeled corpus
-    // (top-500 vocab, Laplace smoothing; memoized per dir — see nbModel),
-    // predict every doc; DuckDB refits the same model relationally and
-    // replays the rounded-score argmax with the same larger-label
-    // tie-break.
-    "q_nb_lang" -> ((s, dir) =>
-      graft.operators.NaiveBayes.predict(
-        t(s, dir, "documents"), "text", "doc_id", nbModel(s, dir))),
+    // (top-500 vocab, Laplace smoothing), predict every doc; DuckDB
+    // refits the same model relationally and replays the rounded-score
+    // argmax with the same larger-label tie-break.
+    "q_nb_lang" -> ((s, dir) => {
+      val docs = t(s, dir, "documents")
+      graft.operators.NaiveBayes.predict(docs, "text", "doc_id",
+        graft.operators.NaiveBayes.fit(docs, "text", "lang"))
+    }),
 
     // Interpolated bigram-LM scoring, ORACLED: DuckDB refits the same
     // top-1000 unigram + top-2000 bigram tables and replays the
     // λ·P(w2|w1) + (1−λ)·P(w2) interpolation per adjacent pair.
-    "q_bigram_nll" -> ((s, dir) =>
-      graft.operators.UnigramLm.bigramScoresWith(
-        t(s, dir, "documents"), "text", "doc_id", biLm(s, dir))),
+    "q_bigram_nll" -> ((s, dir) => {
+      val docs = t(s, dir, "documents")
+      graft.operators.UnigramLm.bigramScoresWith(docs, "text", "doc_id",
+        graft.operators.UnigramLm.fitBigram(docs, "text"))
+    }),
 
     // Group-disjoint split, ORACLED: every row of a source lands on the
     // same side (the leakage-safe split — near-dups cluster within
@@ -1124,7 +1127,7 @@ object TextQueries {
     "q_shared_spans" -> ((s, dir) => {
       graft.operators.SpanDedup.sharedSpans(
         spanFixture(s, dir), "text", "doc_id",
-        l = 5, minSpan = 8, maxDf = 50, seeded = Some(spanSeeds(s, dir)))
+        l = 5, minSpan = 8, maxDf = 50)
     }),
 
     // Per-document contamination rollup of the same spans: longest span
@@ -1132,7 +1135,7 @@ object TextQueries {
     "q_span_contamination" -> ((s, dir) => {
       graft.operators.SpanDedup.spanContamination(
         spanFixture(s, dir), "text", "doc_id",
-        l = 5, minSpan = 8, maxDf = 50, seeded = Some(spanSeeds(s, dir)))
+        l = 5, minSpan = 8, maxDf = 50)
     }),
 
     // Span decontamination vs a broadcast eval set, ORACLED: eval rows
@@ -1354,7 +1357,7 @@ object TextQueries {
     // constant-false — the corruption makes the leg discriminate), the
     // C4 page gate on a replayable 3-slice page (the q_line_dedup
     // substring trick — raw fixture text has no terminal punctuation),
-    // and the memoized LR classifier's 0.5-threshold prediction;
+    // and the LR classifier's 0.5-threshold prediction;
     // keep = majority (2 of 3). Each leg is a narrow scan-side pass;
     // the joins exchange (id, flag) rows only. DuckDB replays all three
     // legs (the gopher metric block, the C4 line gate, the unrolled LR
@@ -1487,7 +1490,7 @@ object TextQueries {
       // round-8 lesson): a PERSISTED frame as a join input never gets
       // AQE's runtime broadcast conversion (InMemoryRelation is not a
       // query stage), so the fp self-join below ran as a sort-merge with
-      // both sides exchanged and sorted (JobProfile: two ~6 core-s
+      // both sides exchanged and sorted (profiled: two ~6 core-s
       // stages over a ~100k-row frame). Checkpoint blocks carry exact
       // size stats, the winnow pass still runs exactly once, and the
       // self-join's build side broadcasts.
@@ -1610,93 +1613,23 @@ object TextQueries {
     }),
   )
 
-  /** One LR fit per (sfDir) per JVM, shared by the three classifier
-    * queries (round-8 verdict #3: each re-ran the identical deterministic
-    * 2-epoch fit — ~4 driver-collect jobs — before its own evaluation
-    * pass). The fitted Model is pure data (token→weight map + bias, no
-    * session references), and the fit is a deterministic function of the
-    * fixture dir + the config pinned here, so a JVM-wide dir-keyed memo
-    * is semantics-neutral: every query still scores/evaluates with its
-    * own distributed pass. A concurrent double-fit computes the same
-    * model twice — harmless.
+  /** The LR fit the four classifier queries score with (vocab 32, two
+    * full-batch epochs, `lang = 'en'` labels). Each query fits once; the
+    * oracle replays the same fit as CTEs.
     */
-  private val lrFitCache = scala.collection.concurrent.TrieMap
-    .empty[String, graft.operators.QualityClassifier.Model]
   private def lrModel(s: SparkSession, dir: String)
       : graft.operators.QualityClassifier.Model =
-    lrFitCache.getOrElseUpdate(dir,
-      graft.operators.QualityClassifier.fit(
-        t(s, dir, "documents"), "text", "doc_id",
-        col("lang") === "en", vocabSize = 32, iters = 2, lr = 0.5))
+    graft.operators.QualityClassifier.fit(
+      t(s, dir, "documents"), "text", "doc_id",
+      col("lang") === "en", vocabSize = 32, iters = 2, lr = 0.5)
 
-  /** The NB language-classifier fit, memoized per dir with the same
-    * contract (and honesty caveat) as [[lrModel]]: the model is plain
-    * literals, the fixture dirs are immutable, and q_nb_lang's repeat
-    * runs measure the SCORING path — the three fit collects run once.
+  /** The unigram LM fit (top-1000 vocab) that q_unigram_nll and
+    * q_ppl_buckets each score with.
     */
-  private val nbFitCache = scala.collection.concurrent.TrieMap
-    .empty[String, graft.operators.NaiveBayes.Model]
-  private def nbModel(s: SparkSession, dir: String)
-      : graft.operators.NaiveBayes.Model =
-    nbFitCache.getOrElseUpdate(dir,
-      graft.operators.NaiveBayes.fit(
-        t(s, dir, "documents"), "text", "lang"))
-
-  /** The unigram / interpolated-bigram LM fits, memoized per dir with
-    * the same contract (and measurement-honesty caveat) as [[lrModel]]
-    * and [[nbModel]]: the models are pure serialized score tables, the
-    * fits deterministic functions of the fixture dir + the registry
-    * params pinned here (vocab 1000 / bigrams 2000 / λ 0.7). The three
-    * LM queries (q_unigram_nll, q_bigram_nll, q_ppl_buckets) share the
-    * unigram fit; repeat runs measure the narrow codegen scoring path.
-    */
-  private val uniLmCache = scala.collection.concurrent.TrieMap
-    .empty[String, Option[graft.operators.UnigramLm.UniModel]]
   private def uniLm(s: SparkSession, dir: String)
       : Option[graft.operators.UnigramLm.UniModel] =
-    uniLmCache.getOrElseUpdate(dir,
-      graft.operators.UnigramLm.fitUnigram(
-        t(s, dir, "documents"), "text", vocabSize = 1000))
-  private val biLmCache = scala.collection.concurrent.TrieMap
-    .empty[String, Option[graft.operators.UnigramLm.BiModel]]
-  private def biLm(s: SparkSession, dir: String)
-      : Option[graft.operators.UnigramLm.BiModel] =
-    biLmCache.getOrElseUpdate(dir,
-      graft.operators.UnigramLm.fitBigram(
-        t(s, dir, "documents"), "text"))
-
-  /** The checkpointed positioned-5-gram seed frame over the span fixture,
-    * memoized per (session, dir) — q_shared_spans and q_span_contamination
-    * run the SAME seed scan (tokenize + shingle every fixture doc) before
-    * their pair joins; sharing it tokenizes once. Unlike the literal model
-    * memos this holds a session-bound DataFrame, so the key includes the
-    * session identity and the map is bounded (8 entries, insertion-evict).
-    * Measurement honesty (same caveat as lrModel): repeat bench runs of
-    * the two span queries measure the df-cap + pair-join + island-window
-    * path; the seed scan runs once per session.
-    */
-  private val spanSeedCache =
-    new java.util.LinkedHashMap[(Int, String), DataFrame](8, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(Int, String), DataFrame]): Boolean =
-        size() > 8
-    }
-  private def spanSeeds(s: SparkSession, dir: String): DataFrame =
-    spanSeedCache.synchronized {
-      val key = (System.identityHashCode(s), dir)
-      var f = spanSeedCache.get(key)
-      // identity guard: identityHashCode can recur after GC, and a hit
-      // from a DIFFERENT (or stopped) session would hand out checkpoint
-      // blocks of a dead context — recompute unless it is the same live
-      // session object
-      if (f == null || !(f.sparkSession eq s) ||
-          s.sparkContext.isStopped) {
-        f = graft.operators.SpanDedup.seeds(
-          spanFixture(s, dir), "text", "doc_id", l = 5).localCheckpoint()
-        spanSeedCache.put(key, f)
-      }
-      f
-    }
+    graft.operators.UnigramLm.fitUnigram(
+      t(s, dir, "documents"), "text", vocabSize = 1000)
 
   /** The oracled md5 near-dup clusters, shared by q_neardup_clusters and
     * q_cluster_split: the production chain [[Dedup.nearDupClusters]]

@@ -31,10 +31,10 @@ object Tables {
     *    session timezone every graft session pins.
     */
   /** Conf a session reading a NANOS-encoded `events` must carry (set by
-    * the graft session builders — Bench/Verify/Explain and the test
-    * harness — at construction; `table` deliberately does NOT set it, so
-    * reading one table can't silently change parquet semantics
-    * session-wide).
+    * the graft session builders — Verify, perfbench, ScaleRehearsal and
+    * the test harness — at construction; `table` deliberately does NOT
+    * set it, so reading one table can't silently change parquet
+    * semantics session-wide).
     */
   val nanosAsLongKey = "spark.sql.legacy.parquet.nanosAsLong"
 

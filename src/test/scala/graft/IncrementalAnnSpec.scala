@@ -55,9 +55,7 @@ class IncrementalAnnSpec extends SparkSpec {
     val viaIndex = rows(IncrementalAnn.query(all, "vec_id", "embedding",
       "ia_par", k = 3, nProbe = 2))
     val viaBatch = rows(Similarity.annIvf(all, "vec_id", "embedding",
-      k = 3, nCells = 4, nProbe = 2, fitted = Some(fittedBoot),
-      fittedCellCounts = Some(Similarity.ivfCellCounts(
-        all, "vec_id", "embedding", fittedBoot))))
+      k = 3, nCells = 4, nProbe = 2, fitted = Some(fittedBoot)))
     assert(viaIndex === viaBatch)
     assert(viaIndex.nonEmpty)
     // the fitted chaining shortcut (skip the sidecar read) is
@@ -190,9 +188,7 @@ class IncrementalAnnSpec extends SparkSpec {
     val viaIndex = rows(IncrementalAnn.query(all, "vec_id", "embedding",
       "ia_rb", k = 3, nProbe = 2))
     val viaBatch = rows(Similarity.annIvf(all, "vec_id", "embedding",
-      k = 3, nCells = 4, nProbe = 2, fitted = Some(newCents),
-      fittedCellCounts = Some(Similarity.ivfCellCounts(
-        all, "vec_id", "embedding", newCents))))
+      k = 3, nCells = 4, nProbe = 2, fitted = Some(newCents)))
     assert(viaIndex === viaBatch)
     // no swap debris
     Seq("ia_rb__rebuild", "ia_rb__old", "ia_rb_centroids__rebuild",

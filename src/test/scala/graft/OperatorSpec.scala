@@ -548,13 +548,18 @@ class OperatorSpec extends SparkSpec {
     import graft.operators.Curation
     import spark.implicits._
     // docs 1 and 2 share a text: the keeper is doc 1, with ITS meta.src
-    val docs = Seq((2L, "same text", "b"), (1L, "same text", "a"),
-        (3L, "other text", "c"))
-      .toDF("doc_id", "text", "meta.src")
-    val kept = Curation.dropExactDups(docs, "text", "doc_id")
-    assert(kept.columns.toSeq === docs.columns.toSeq)
-    assert(kept.select(col("doc_id"), col("`meta.src`")).as[(Long, String)]
-      .collect().toSet === Set((1L, "a"), (3L, "c")))
+    val docs = Seq((2L, "same text", "b", "en"), (1L, "same text", "a", "en"),
+        (3L, "other text", "c", "en"))
+      .toDF("doc_id", "text", "meta.src", "lang")
+    // the standalone keeper, and curate's merged keeper pass
+    val (train, test) = Curation.curate(docs, "doc_id", "text", "lang",
+      Curation.Config(minTokens = 1, maxStopRatio = 1.0))
+    for (kept <- Seq(Curation.dropExactDups(docs, "text", "doc_id"),
+        train.union(test))) {
+      assert(kept.columns.toSeq === docs.columns.toSeq)
+      assert(kept.select(col("doc_id"), col("`meta.src`")).as[(Long, String)]
+        .collect().toSet === Set((1L, "a"), (3L, "c")))
+    }
   }
 
   test("curation pipeline: filters, dedups, and splits exactly as specified") {
