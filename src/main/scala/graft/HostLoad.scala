@@ -1,9 +1,8 @@
 package graft
 
-/** Host load / contention probes shared by perfbench (recorded next to
-  * every timed round) and [[ScaleRehearsal]]'s gated legs: a wall-clock
-  * gate needs contention evidence, or a co-tenant burst on a shared host
-  * makes it pass or fail spuriously.
+/** Host load / contention probes for perfbench, recorded next to every
+  * timed round: a timing needs contention evidence, or a co-tenant burst
+  * on a shared host skews it without a trace.
   *
   * All probes are read-only procfs reads or a bounded spin; each returns a
   * sentinel (-1) instead of throwing on a non-Linux / unreadable host so

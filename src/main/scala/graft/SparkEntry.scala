@@ -117,10 +117,16 @@ object SparkEntry {
     * hash-oracled exact-md5 sibling proving the same operator semantics
     * (q_ann_*_md5, q_lsh_bucket_md5, q_minhash_md5, q_embed_neardup,
     * q_percentiles/q_distinct_agg; q_delta_index_write's decisions are
-    * hash-oracled by q_delta_curate), and recall floors are asserted in
-    * specs and the scale rehearsal. Verify dumps this set as
-    * `rows_only.json` so correctness tooling can report these rows as
-    * "rows_only (by design)" rather than a `no_oracle` error.
+    * hash-oracled by q_delta_curate). Each approximate row's quality is
+    * asserted in a spec: recall floors for q_ann_lsh, q_ann_pq and
+    * q_embed_neardup_lsh (OperatorSpec, "ANN recall floors at BENCH
+    * scale"), error bounds for q_approx_distinct (ScaleLayoutSpec, HLL)
+    * and q_approx_percentile (OperatorSpec, percentile sketch), and
+    * kernel-vs-fold bit parity for q_lsh_buckets (OperatorSpec,
+    * HyperplaneSketch) and q_minhash_lsh (TextAnalysisSpec,
+    * graft_minhash). Verify dumps this set as `rows_only.json` so
+    * correctness tooling can report these rows as "rows_only (by
+    * design)" rather than a `no_oracle` error.
     */
   def rowsOnly: Set[String] = Set(
     "q_ann_lsh", "q_ann_pq",

@@ -424,24 +424,40 @@ object Curation {
       .withColumn("__tk", TextAnalysis.tokens(col(textCol)))
     val quality = withTk.filter(
       qualityPredicateOnTokens(col("__tk"), textCol, langCol, cfg))
-    // The eval job LAUNCHES FIRST, on its own thread: the eval-side Bloom
-    // agg reads only the eval set, so it is independent of the keeper
-    // checkpoint and the two jobs overlap on the cluster instead of
-    // running back to back (Spark's scheduler handles concurrent actions;
-    // measured ~0.4 s off the sf0.1 wall clock). The require and every
-    // downstream consumer stay on the caller's thread.
-    val guardF = evalSet.map { ev =>
-      // ONE eval-side job on the future thread (round 12, verdict r11
-      // item 1 — cut the action floor): the Bloom filter and the
-      // broadcast-size guard ride the shingle-set checkpoint as observe
-      // metrics instead of a second standalone agg action over the
-      // checkpointed blocks (the DeltaCurate diff-count pattern). The
-      // exact-verify broadcast below reads the same blocks. The eager
-      // checkpoint itself stays: a lazy persist kept the distinct's 32
-      // shuffle partitions alive into downstream consumers, and the r11
-      // A/B (coalesce(1) agg + recomputed broadcast subtree) measured
-      // 1.9-2.4 s vs 1.7-2.3 s — no gain, worse eval-reuse posture.
-      scala.concurrent.Future {
+    // The merged keeper pass (round 13): gate + shingles + fingerprint +
+    // exact dedup in ONE action, materialized once. C4 rewrite AFTER the
+    // gate (the page gate must see the raw page); fingerprints/shingles
+    // then dedup the RETAINED content, so under c4 the shingles must
+    // re-tokenize the rewritten text — only the c4-off path reuses __tk.
+    // The keeper is [[Dedup.keeperRows]] (min_by(full-row struct, id)):
+    // deterministic because idCol is unique (precondition above),
+    // partial-aggregable so duplicate classes collapse map-side before
+    // the exchange, and it quotes every column, so dotted names pass.
+    val shingled = (if (cfg.c4)
+        quality.withColumn(textCol, TextAnalysis.c4CleanLines(col(textCol)))
+          .withColumn("__sh",
+            TextAnalysis.shingles(TextAnalysis.tokens(col(textCol))))
+      else quality.withColumn("__sh", TextAnalysis.shingles(col("__tk"))))
+      .withColumn("__fp", TextAnalysis.fingerprint(col(textCol)))
+      .drop("__tk")
+    // The eval job runs BESIDE the keeper checkpoint: the eval-side Bloom
+    // agg reads only the eval set, so the two jobs overlap on the cluster
+    // instead of running back to back (measured ~0.4 s off the sf0.1
+    // wall clock). [[graft.Concurrent.both]] returns only once both have
+    // finished, so a failing keeper pass never leaves the eval job
+    // running against the caller's session. ONE eval-side job (round 12,
+    // verdict r11 item 1 — cut the action floor): the Bloom filter and
+    // the broadcast-size guard ride the shingle-set checkpoint as observe
+    // metrics instead of a second standalone agg action over the
+    // checkpointed blocks (the DeltaCurate diff-count pattern). The
+    // exact-verify broadcast below reads the same blocks. The eager
+    // checkpoint itself stays: a lazy persist kept the distinct's 32
+    // shuffle partitions alive into downstream consumers, and the r11
+    // A/B (coalesce(1) agg + recomputed broadcast subtree) measured
+    // 1.9-2.4 s vs 1.7-2.3 s — no gain, worse eval-reuse posture.
+    val (keepers, evalGuard) = graft.Concurrent.both(
+      Dedup.keeperRows(shingled, idCol).drop("__fp").localCheckpoint(),
+      evalSet.map { ev =>
         val obs = org.apache.spark.sql.Observation()
         val evalShingles = Similarity.spreadIfNarrow(ev)
           .select(explode(
@@ -465,35 +481,14 @@ object Curation {
         (evalShingles,
           m.get("__bf").orNull.asInstanceOf[Array[Byte]],
           m.get("__n").map(_.asInstanceOf[Long]).getOrElse(0L))
-      }(scala.concurrent.ExecutionContext.global)
-    }
-    // The merged keeper pass (round 13): gate + shingles + fingerprint +
-    // exact dedup in ONE action, materialized once. C4 rewrite AFTER the
-    // gate (the page gate must see the raw page); fingerprints/shingles
-    // then dedup the RETAINED content, so under c4 the shingles must
-    // re-tokenize the rewritten text — only the c4-off path reuses __tk.
-    // The keeper is [[Dedup.keeperRows]] (min_by(full-row struct, id)):
-    // deterministic because idCol is unique (precondition above),
-    // partial-aggregable so duplicate classes collapse map-side before
-    // the exchange, and it quotes every column, so dotted names pass.
-    val shingled = (if (cfg.c4)
-        quality.withColumn(textCol, TextAnalysis.c4CleanLines(col(textCol)))
-          .withColumn("__sh",
-            TextAnalysis.shingles(TextAnalysis.tokens(col(textCol))))
-      else quality.withColumn("__sh", TextAnalysis.shingles(col("__tk"))))
-      .withColumn("__fp", TextAnalysis.fingerprint(col(textCol)))
-      .drop("__tk")
-    val keepers = Dedup.keeperRows(shingled, idCol).drop("__fp")
-      .localCheckpoint()
+      })
     // Decontamination applies lazily to the LSH signature input below —
     // sound ordering per the scaladoc (exact dedup commutes with
     // decontamination), and the verify joins may read RAW keeper blocks
     // because every candidate pair's ids come from decontaminated
     // signatures by construction.
-    val deconKeepers = guardF match {
-      case Some(fut) =>
-        val (evalShingles, bf, nEvalShingles) = scala.concurrent.Await
-          .result(fut, scala.concurrent.duration.Duration.Inf)
+    val deconKeepers = evalGuard match {
+      case Some((evalShingles, bf, nEvalShingles)) =>
         require(nEvalShingles <= MaxEvalShingles,
           s"curate eval set explodes to $nEvalShingles distinct " +
             s"shingles (> $MaxEvalShingles) — the exact verify broadcasts " +

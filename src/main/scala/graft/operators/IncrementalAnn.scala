@@ -61,7 +61,7 @@ object IncrementalAnn {
 
   /** Drop an index and its sidecars, tables AND storage dirs — the
     * idempotence preamble every drop-then-rebuild caller needs (the
-    * registered produce rows, the rehearsal leg). One shared helper
+    * registered produce rows). One shared helper
     * (review finding r14): the per-caller copies hand-built
     * `<warehouse>/<name>` paths, the exact pattern [[dropTableAndDir]]'s
     * catalog resolution exists to avoid.
@@ -559,8 +559,8 @@ object IncrementalAnn {
     * histogram vs the probe cap — into the rebuild/no-rebuild decision
     * plus a recommended cell count. This is exactly the loop the 100×
     * rehearsal executed by hand (healthy growth tripping the cap gate →
-    * rebuild at 64 cells → 6.8× query win), promoted to an operator the
-    * rehearsal now calls.
+    * rebuild at 64 cells → 6.8× query win, SCALE_REHEARSAL.md), promoted
+    * to an operator.
     *
     * Input: a drift frame from [[quantizerDrift]] (or [[cellDrift]] for
     * catalog-free callers) — ≤ nCells rows of

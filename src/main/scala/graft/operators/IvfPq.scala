@@ -450,7 +450,7 @@ object IvfPq {
     * query get their exact cosine computed (c = k degenerates to a pure
     * re-scoring of the ADC set). Pick `c` from the measured
     * recall-vs-wall curve, not folklore: the rehearsal's `ivfpqp` leg
-    * sweeps C ∈ {k, 2k, 8k, 64} at 10× and 100× and commits the curve
+    * swept C ∈ {k, 2k, 8k, 64} at 10× and 100× and committed the curve
     * (SCALE_REHEARSAL.md §r16 — at 100× recall saturates well below
     * C=64 while the wall grows with the rehydration width).
     */
@@ -563,8 +563,8 @@ object IvfPq {
     * At 100 TB: one narrow codegen encode pass over the BATCH (assign →
     * residual → fused code argmax, zero shuffles) plus one exchange on
     * `cell` for the bucketed write — cost proportional to the batch, not
-    * the index it lands in (the flat-append property the rehearsal leg
-    * gates).
+    * the index it lands in (the flat-append property SCALE_REHEARSAL.md
+    * measured at 10× and 100×).
     */
   def appendPersisted(
       batch: DataFrame,

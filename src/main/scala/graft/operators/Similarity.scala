@@ -247,13 +247,25 @@ object Similarity {
       .select(col("q_id"), col("t.id").as("n_id"), col("t.score").as("sim4"),
         (col("pos") + 1).cast("long").as("rn"))
 
+  /** The `nBits`-bit hyperplane bucket of `v` ([[VectorFunctions.lshBucket]])
+    * under `hash`: [[SketchHash.XxHash64]] runs the codegen
+    * `graft_lsh_bucket` kernel (HyperplaneSketch), [[SketchHash.Md5]] the
+    * interpreted md5 fold. Callers register the graft functions first.
+    */
+  private def hyperplaneBucket(v: Column, nBits: Int, hash: SketchHash): Column =
+    hash match {
+      case SketchHash.XxHash64 =>
+        call_function("graft_lsh_bucket", asDouble(v), lit(nBits))
+      case SketchHash.Md5 => lshBucket(v, nBits, hash)
+    }
+
   /** Per-vector LSH sketch assignment (narrow, shuffle-free; fused codegen
     * loop — see HyperplaneSketch).
     */
   def sketched(df: DataFrame, idCol: String, vecCol: String, nBits: Int = 8): DataFrame = {
     graft.plans.GraftFunctions.register(df.sparkSession)
     df.withColumn("bucket",
-      call_function("graft_lsh_bucket", asDouble(col(vecCol)), lit(nBits)))
+      hyperplaneBucket(col(vecCol), nBits, SketchHash.XxHash64))
   }
 
   /** Embedding-cosine near-dup pairs at scale — the auto-scale counterpart
@@ -301,7 +313,7 @@ object Similarity {
       .localCheckpoint()
     val banded = vecs
       .withColumn("__sketch",
-        call_function("graft_lsh_bucket", col("__v"), lit(nBits * nTables)))
+        hyperplaneBucket(col("__v"), nBits * nTables, SketchHash.XxHash64))
       .select(col(idCol),
         // degenerate vectors can't be near-dups of anything by cosine, so
         // null their band keys (posexplode drops nulls) rather than let
@@ -440,11 +452,7 @@ object Similarity {
       maxBucketSize: Int = 10000): DataFrame = {
     require(k >= 1, s"k must be positive, got $k")
     graft.plans.GraftFunctions.register(df.sparkSession)
-    val bucket = hash match {
-      case SketchHash.XxHash64 =>
-        call_function("graft_lsh_bucket", asDouble(col(vecCol)), lit(nBits))
-      case SketchHash.Md5 => lshBucket(col(vecCol), nBits, hash)
-    }
+    val bucket = hyperplaneBucket(col(vecCol), nBits, hash)
     // the bucket feeds the cap count and both self-join sides — checkpoint
     // eagerly so none of them recomputes it (the md5 fold is nBits × dim
     // interpreted md5 calls per vector; the signature-frame lesson), and

@@ -31,8 +31,8 @@ object Tables {
     *    session timezone every graft session pins.
     */
   /** Conf a session reading a NANOS-encoded `events` must carry (set by
-    * the graft session builders — Verify, perfbench, ScaleRehearsal and
-    * the test harness — at construction; `table` deliberately does NOT
+    * the graft session builders — Verify, perfbench and the test
+    * harness — at construction; `table` deliberately does NOT
     * set it, so reading one table can't silently change parquet
     * semantics session-wide).
     */

@@ -26,6 +26,10 @@ class ConcurrentSpec extends AnyFunSuite {
     assert(secondDone.get)
   }
 
+  test("both: returns both legs' values") {
+    assert(Concurrent.both(21 * 2, "b") === ((42, "b")))
+  }
+
   test("both: when both legs fail, the first is rethrown with the second suppressed") {
     val err = intercept[IllegalStateException](Concurrent.both(
       throw new IllegalStateException("first"),

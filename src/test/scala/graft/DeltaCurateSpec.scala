@@ -168,14 +168,15 @@ class DeltaCurateSpec extends SparkSpec {
       (10L, doc(10), "en"),
       (11L, doc(3) + " tiny tail", "en"),
       (12L, doc(20), "en")).toDF("doc_id", "text", "lang"))
-    val ids2 = Seq(tablesA, tablesB).map { case (fp, sig) =>
-      DeltaCurate.run(m1, m2, "doc_id", "text", "lang", cfg,
+    val month2 = Seq(tablesA, tablesB).map { case (fp, sig) =>
+      val r = DeltaCurate.run(m1, m2, "doc_id", "text", "lang", cfg,
         fp, sig, buckets = 4)
-        .survivors.select("doc_id").collect().map(_.getLong(0)).toSet
+      (r.survivors.select("doc_id").collect().map(_.getLong(0)).toSet,
+        (r.added, r.changed, r.removed, r.gated))
     }
-    assert(ids2.head === Set(10L), s"uncompacted month-2: ${ids2.head}")
-    assert(ids2(1) === ids2.head,
-      "month 2 must behave identically with and without compaction")
+    assert(month2.head._1 === Set(10L), s"uncompacted month-2: ${month2.head}")
+    assert(month2(1) === month2.head, "month 2 must behave identically " +
+      "(survivors and diff counts) with and without compaction")
 
     // month 3 re-adds doc 2's DEAD v0 text: the uncompacted index still
     // suppresses it, the compacted one has (by design) forgotten it
@@ -326,8 +327,8 @@ class DeltaCurateSpec extends SparkSpec {
   test("each append adds at most one file per bucket; compaction leaves one") {
     // The r8 one-file-per-bucket invariant (the repartition-on-the-bucket-
     // expression before each bucketed write), pinned in CI across a
-    // MULTI-append sequence — the shape the 10x rehearsal's delta leg
-    // audits at scale. Regressing it re-opens the accumulating
+    // MULTI-append sequence — the shape SCALE_REHEARSAL.md's delta leg
+    // audited at 10x. Regressing it re-opens the accumulating
     // small-files tax on every later index scan.
     def bucketFiles(table: String): Map[Int, Int] = {
       val loc = spark.sql(s"DESC FORMATTED $table")
@@ -368,7 +369,9 @@ class DeltaCurateSpec extends SparkSpec {
     DeltaCurate.compact(snaps.last, "doc_id", "text",
       "dc_fp", "dc_sig", buckets = 4)
     Seq("dc_fp", "dc_sig").foreach { t =>
-      bucketFiles(t).foreach { case (b, n) =>
+      val files = bucketFiles(t)
+      assert(files.nonEmpty, s"$t file audit saw nothing after compaction")
+      files.foreach { case (b, n) =>
         assert(n <= 1, s"$t bucket $b has $n files after compaction")
       }
     }

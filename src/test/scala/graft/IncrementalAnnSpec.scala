@@ -45,6 +45,8 @@ class IncrementalAnnSpec extends SparkSpec {
       nCells = 4)
     val c2 = IncrementalAnn.append(incr, "vec_id", "embedding", "ia_par",
       nCells = 4)
+    // nothing dropped, nothing written twice
+    assert(spark.table("ia_par").count() === allIds.length.toLong)
     // the quantizer is FROZEN at bootstrap: the second append loads the
     // sidecar, never refits (a refit on the increment would silently
     // desynchronize the index's earlier assignments)
@@ -419,7 +421,9 @@ class IncrementalAnnSpec extends SparkSpec {
             .collect { case p if isIndexScan(p) => p }.isEmpty,
           s"the bucketed index scan moved through an exchange:\n$plan")
       }
-      plan.collect { case b: BroadcastExchangeExec => b }.foreach { b =>
+      val bcasts = plan.collect { case b: BroadcastExchangeExec => b }
+      assert(bcasts.nonEmpty, s"expected the okCells broadcast:\n$plan")
+      bcasts.foreach { b =>
         assert(b.collect { case g: GenerateExec => g }.isEmpty,
           s"the probe (large) side was broadcast:\n$plan")
       }

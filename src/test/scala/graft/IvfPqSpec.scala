@@ -105,6 +105,12 @@ class IvfPqSpec extends SparkSpec {
     val again = pairs(IvfPq.annIvfPq(e, e, "vec_id", "embedding", coarse,
       cents, k = 3, nProbe = 2))
     assert(got === again)
+    // twice the code bytes (m = 8 subspaces) holds the same floor
+    val got8 = pairs(IvfPq.annIvfPq(e, e, "vec_id", "embedding", coarse,
+      IvfPq.fit(e, "vec_id", "embedding", coarse, m = 8, k = 8, iters = 2),
+      k = 3, nProbe = 2))
+    val recall8 = got8.intersect(exact).size.toDouble / exact.size
+    assert(recall8 > 0.05, s"IVF+PQ m=8 recall@3 $recall8")
   }
 
   test("query side fails fast past the broadcast gate") {
@@ -137,7 +143,7 @@ class IvfPqSpec extends SparkSpec {
     val one = e.filter(col("vec_id") === 0L)
     val pruned = IvfPq.queryPersisted(one, "vec_id", "embedding",
       "ivfpq_spec_idx", k = 3, nProbe = 2)
-    pruned.collect()
+    assert(pruned.collect().nonEmpty, "single-query probe returned no rows")
     def allNodes(p: org.apache.spark.sql.execution.SparkPlan)
         : Seq[org.apache.spark.sql.execution.SparkPlan] = p +: (p match {
       case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>

@@ -586,6 +586,18 @@ class OperatorSpec extends SparkSpec {
     val testIds = test.select("doc_id").collect().map(_.getLong(0)).toSet
     assert(trainIds.intersect(testIds).isEmpty)
     assert(trainIds.union(testIds) === survivors)
+    // near-copy keeper collapse: three salted copies of every doc with
+    // shifted ids are near-dups of one another, so the transitive path
+    // keeps ONE doc per family and the survivors stay those of 1x
+    val copies = (0 until 3).map(c => docs.select(
+        (col("doc_id") + 100L * c).as("doc_id"),
+        concat(col("text"), lit(s" copysalt$c")).as("text"),
+        col("lang"), col("source")))
+      .reduce(_.union(_))
+    val kept = Curation.curateFlagged(copies, "doc_id", "text", "lang",
+      cfg.copy(transitiveNearDups = true))
+      .select("doc_id").collect().map(_.getLong(0)).toSet
+    assert(kept === Set(1L, 4L))
   }
 
   test("curateFlagged materializes exactly three frames (round-13 fusion " +
@@ -735,6 +747,41 @@ class OperatorSpec extends SparkSpec {
     val all2 = (tr2.select("doc_id").collect() ++
       te2.select("doc_id").collect()).map(_.getLong(0)).toSet
     assert(all2 === Set(1L, 4L, 7L))
+  }
+
+  test("curateFlagged: a failing keeper pass surfaces only after the eval " +
+    "job finished, so no job is left running") {
+    import graft.operators.Curation
+    import spark.implicits._
+    val base = "the quick brown fox jumps over a lazy dog and runs far away " * 4
+    // the repartition keeps the raising column out of the optimizer's
+    // local-relation folding: it must fail inside the keeper job
+    val docs = Seq(
+      (1L, base + "alpha beta gamma delta epsilon zeta", "en"),
+      (3L, base + "totally different closing words here now then", "en"))
+      .toDF("doc_id", "text", "lang").repartition(2)
+      .withColumn("tag", when(col("doc_id") === 3L,
+        raise_error(lit("keeper pass failed"))).otherwise(lit("ok")))
+    // the eval leg sleeps in its scan, so it is still running when the
+    // keeper pass fails
+    val slow = udf((t: String) => { Thread.sleep(2000); t })
+    val eval = Seq("held out benchmark phrasing lives here").toDF("text")
+      .repartition(1).select(slow(col("text")).as("text"))
+    val cfg = Curation.Config(minTokens = 30, maxStopRatio = 0.9,
+      langs = Seq("en"))
+    val err = intercept[Exception](Curation.curateFlagged(
+      docs, "doc_id", "text", "lang", cfg, evalSet = Some(eval)))
+    assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .exists(e => String.valueOf(e.getMessage).contains("keeper pass failed")),
+      err.toString)
+    // the status store catches up asynchronously with a finished job; a
+    // detached eval job would run on for most of its 2 s sleep
+    val tracker = spark.sparkContext.statusTracker
+    val deadline = System.nanoTime() + 500L * 1000 * 1000
+    while (tracker.getActiveJobIds.nonEmpty && System.nanoTime() < deadline)
+      Thread.sleep(20)
+    assert(tracker.getActiveJobIds.isEmpty,
+      s"jobs still running: ${tracker.getActiveJobIds.toSeq}")
   }
 
   test("decontaminate fails fast on an oversized eval side") {
@@ -1697,6 +1744,16 @@ class OperatorSpec extends SparkSpec {
       Dedup.winnowFingerprints(TA.tokens(col("text")), k, w).as("fps"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     assert((1L to 6L).forall(id => fps(id) === fps2(id)))
+    // near-copies (doc 1 plus a per-copy salt token, shifted ids): the
+    // overlap screen pairs every copy with every other
+    val copies = (0 until 3).map(c => docs.filter(col("doc_id") === 1L)
+      .select((col("doc_id") + 100L * c).as("doc_id"),
+        concat(col("text"), lit(s" copysalt$c")).as("text")))
+      .reduce(_.union(_))
+    val pairs = Dedup.winnowOverlapPairs(copies, "text", "doc_id")
+      .select("id_a", "id_b").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(pairs === Set((1L, 101L), (1L, 201L), (101L, 201L)))
   }
 
   test("ngramF1: harmonic balance of the containment directions, edge cases") {

@@ -145,6 +145,46 @@ class PropertySpec extends SparkSpec {
     assert(one === 1.0 / 3.0 + -0.0 + 4.9e-324 + Double.MaxValue)
   }
 
+  test("a 2x copy with shifted ids doubles sessions and funnel reach and " +
+    "keeps every audit rate (batched)") {
+    import graft.operators.{Constraints, Events}
+    import graft.operators.Constraints._
+    import spark.implicits._
+    val steps = Seq("view", "click", "purchase")
+    // 40 events of 6 users over 6 h: gaps past the 30 min cut split
+    // sessions, and each user meets the steps in a random order
+    val events = Gen.listOfN(40, Gen.zip(Gen.chooseNum(1L, 6L),
+        Gen.chooseNum(0L, 6L * 3600L), Gen.oneOf(steps))).sample.get
+      .zipWithIndex.map { case ((u, sec, t), i) => (i.toLong, u, sec, t) }
+      .toDF("event_id", "user_id", "sec", "event_type")
+      .select(col("event_id"), col("user_id"),
+        timestamp_seconds(col("sec")).as("ts"), col("event_type"))
+    val events2 = events.union(events.select(
+      (col("event_id") + 1000L).as("event_id"),
+      (col("user_id") + 100L).as("user_id"), col("ts"), col("event_type")))
+    def sessionsAndReach(df: org.apache.spark.sql.DataFrame): (Long, Long) =
+      (Events.sessions(df, "user_id", "ts", "event_id").count(),
+        Events.funnel(df, "user_id", "event_type", "ts", steps)
+          .agg(sum(col("n_reached"))).head().getLong(0))
+    val (s1, f1) = sessionsAndReach(events)
+    assert(s1 > 0 && f1 > 0)
+    assert(sessionsAndReach(events2) === ((2 * s1, 2 * f1)))
+    // per-row audit rates over columns the copy keeps verbatim
+    val docs = Gen.listOfN(30, Gen.zip(Gen.option(Gen.alphaStr),
+        Gen.option(Gen.oneOf("en", "de", "xx")),
+        Gen.oneOf("src1", "src22", "web"))).sample.get
+      .zipWithIndex.map { case ((t, l, src), i) => (i.toLong, t, l, src) }
+      .toDF("doc_id", "text", "lang", "source")
+    val docs2 = docs.union(docs.withColumn("doc_id", col("doc_id") + 1000L))
+    val checks = Seq(Completeness("text", 1000000L),
+      InSet("lang", Seq("en", "de"), 1000000L),
+      MatchesRegex("source", "^src[0-9]+$", 1000000L))
+    def rates(df: org.apache.spark.sql.DataFrame): Map[String, Long] =
+      Constraints.audit(df, checks).collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(rates(docs2) === rates(docs))
+  }
+
   test("union count additivity (E1 invariant): |A union B| == |A| + |B|") {
     import spark.implicits._
     check(Prop.forAll(Gen.listOf(Gen.chooseNum(0, 1000)),

@@ -222,5 +222,26 @@ class ScaleLayoutSpec extends SparkSpec {
       .select("row_id", "label").collect().toSet
     assert(salted === plain)
     assert(salted.size === 1000)
+    // the unsalted alternative: with broadcast off and the split
+    // thresholds scaled to this fixture, AQE splits the hot key's
+    // partition and the result is unchanged
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    val confs = Seq("spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "1k",
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "1k")
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try {
+      val split = fact.join(dim, "key").select("row_id", "label")
+      assert(split.collect().toSet === plain)
+      def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+        case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+        case q: QueryStageExec => nodes(q.plan)
+        case other => other.children.flatMap(nodes)
+      })
+      val nSkewed = nodes(split.queryExecution.executedPlan)
+        .flatMap(_.metrics.get("numSkewedPartitions").map(_.value)).sum
+      assert(nSkewed >= 1L, "AQE never split the skewed partition")
+    } finally confs.foreach { case (k, _) => spark.conf.unset(k) }
   }
 }
