@@ -34,13 +34,6 @@ object VectorFunctions {
     when(denom === 0, 0.0).otherwise(dot(a, b) / denom)
   }
 
-  /** Squared Euclidean distance (monotone in true distance — use for argmin
-    * ranking without the sqrt).
-    */
-  def l2Sq(a: Column, b: Column): Column =
-    aggregate(zip_with(asDouble(a), asDouble(b), (x, y) => (x - y) * (x - y)),
-      lit(0.0), (acc, x) => acc + x)
-
   /** Unit-normalize a vector (null-safe passthrough of zero vectors). */
   def normalize(v: Column): Column = {
     val n = l2Norm(v)

@@ -126,15 +126,4 @@ object Bpe {
     graft.plans.GraftFunctions.register(df.sparkSession)
     df.withColumn(outCol, encode(col(textCol), merges))
   }
-
-  /** Fit on the frame, then tokenize it — the one-call convenience used by
-    * token-budget consumers (Packing, chunking).
-    */
-  def fitTokenize(
-      df: DataFrame,
-      textCol: String,
-      numMerges: Int,
-      vocabWords: Int = 50000,
-      outCol: String = "bpe_tokens"): DataFrame =
-    tokenize(df, textCol, fitMerges(df, textCol, numMerges, vocabWords), outCol)
 }

@@ -19,10 +19,9 @@ import org.apache.spark.sql.functions._
   * HashAggregate pair on the grouping keys — the same minimal plan the
   * reference's hand-written query compiles to. Grouped means are
   * map-side-combined (partial avg = (sum,count)), so shuffle volume is
-  * O(#groups), not O(#records). Unlike the reference, callers that derive
-  * several reports from one flag projection should `.persist()` the flagged
-  * frame (the reference recomputes it 4× — MqReports.scala:136-153; see
-  * SURVEY.md §3.2).
+  * O(#groups), not O(#records). Two nested levels come from ONE
+  * aggregation, [[rollupScores]], where the reference recomputes the
+  * projection 4× (MqReports.scala:136-153; SURVEY.md §3.2).
   */
 object Completeness {
 
@@ -43,6 +42,9 @@ object Completeness {
   def flagged(df: DataFrame, keep: Seq[Column], flags: Seq[Flag]): DataFrame =
     df.select(keep ++ flags.map(f => f.expr.as(f.name)): _*)
 
+  private def scoreAggs(flagNames: Seq[String]): Seq[Column] =
+    flagNames.map(n => mean(col(n)).alias(n)) :+ count(lit(1)).alias("count")
+
   /** Stage 2: grouped means of every flag + record count.
     *
     * The reference counts via `withColumn("count", lit(1))` + `sum("count")`
@@ -50,12 +52,35 @@ object Completeness {
     * extra projected column.
     */
   def scores(flaggedDf: DataFrame, groupCols: Seq[String], flagNames: Seq[String]): DataFrame = {
-    val aggs = flagNames.map(n => mean(col(n)).alias(n)) :+ count(lit(1)).alias("count")
+    val aggs = scoreAggs(flagNames)
     flaggedDf
       .filter(groupCols.map(c => col(c).isNotNull).reduce(_ && _))
       .groupBy(groupCols.map(col): _*)
       .agg(aggs.head, aggs.tail: _*)
   }
+
+  private val Level = "score_level" // 1: outer-key row, 0: (outer, inner) row
+
+  /** Two levels of [[scores]] in one `rollup(outer, inner)` over non-null
+    * outer keys, holding only the rows of [[outerScores]] and [[innerScores]];
+    * means of 0/1 flags are exact, so each equals its [[scores]] row.
+    */
+  def rollupScores(flaggedDf: DataFrame, outer: String, inner: String,
+      flagNames: Seq[String]): DataFrame =
+    flaggedDf
+      .filter(col(outer).isNotNull)
+      .rollup(col(outer), col(inner))
+      .agg(grouping_id().as(Level), scoreAggs(flagNames): _*)
+      .where(col(Level) === 1 || (col(Level) === 0 && col(inner).isNotNull))
+
+  /** `scores(_, Seq(outer), _)`, selected from a [[rollupScores]] frame. */
+  def outerScores(rolled: DataFrame, outer: String, flagNames: Seq[String]): DataFrame =
+    rolled.where(col(Level) === 1).select((outer +: flagNames :+ "count").map(col): _*)
+
+  /** `scores(_, Seq(inner, outer), _)`, selected from a [[rollupScores]] frame. */
+  def innerScores(rolled: DataFrame, outer: String, inner: String,
+      flagNames: Seq[String]): DataFrame =
+    rolled.where(col(Level) === 0).select((inner +: outer +: flagNames :+ "count").map(col): _*)
 
   /** One-shot: flags then scores. */
   def score(df: DataFrame, groupCols: Seq[String], flags: Seq[Flag]): DataFrame =

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.Completeness.Flag
@@ -69,12 +69,15 @@ object MqDpla {
     flags.map(_.name).filterNot(_ == "openRights") :+
       "openRights" :+ "wikimediaReady"
 
+  /** Both reports' scores (MqReports.scala:90-134) in one aggregation. */
+  def scoreRollup(itemdata: DataFrame): DataFrame =
+    Completeness.rollupScores(withDerived(itemdata), "provider", "dataProvider", scoreCols)
+
   /** providerScores (MqReports.scala:90-111). */
   def providerScores(itemdata: DataFrame): DataFrame =
-    Completeness.scores(withDerived(itemdata), Seq("provider"), scoreCols)
+    Completeness.outerScores(scoreRollup(itemdata), "provider", scoreCols)
 
   /** contributorScores (MqReports.scala:113-134). */
   def contributorScores(itemdata: DataFrame): DataFrame =
-    Completeness.scores(withDerived(itemdata),
-      Seq("dataProvider", "provider"), scoreCols)
+    Completeness.innerScores(scoreRollup(itemdata), "provider", "dataProvider", scoreCols)
 }

@@ -226,18 +226,6 @@ object Pq {
         (col("pos") + 1).cast("long").as("rn"))
   }
 
-  /** Fit + compact codes in one call (the common entry). */
-  def fitCodes(
-      df: DataFrame,
-      idCol: String,
-      vecCol: String,
-      m: Int,
-      k: Int,
-      iters: Int): (Array[Array[Array[Double]]], DataFrame) = {
-    val cents = fit(df, idCol, vecCol, m, k, iters)
-    (cents, codes(df, idCol, vecCol, cents))
-  }
-
   /** Argmax code for one subvector against one subspace's codebook:
     * 6-decimal-rounded cosine, ties to the smaller code — the
     * [[Clustering]] withCluster trick (max of (sim, -code) structs).

@@ -37,10 +37,7 @@ object QualityClassifier {
 
   /** Fitted model: token → micro-unit weight, plus the bias. */
   final case class Model(weights: Map[String, Long], biasInt: Long,
-      lr: Double, iters: Int) {
-    /** Vocabulary in deterministic (token asc) order, for oracle replay. */
-    def sortedWeights: Seq[(String, Long)] = weights.toSeq.sortBy(_._1)
-  }
+      lr: Double, iters: Int)
 
   private val BiasTok = "\u0000bias" // outside [a-z0-9]+, can't collide
 

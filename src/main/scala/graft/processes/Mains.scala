@@ -3,10 +3,11 @@ package graft.processes
 import java.time.{LocalDateTime, ZoneOffset}
 import java.time.format.DateTimeFormatter
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.MqDpla
+import graft.schema.DplaMap
 import graft.sinks.{JsonlDump, Manifest, Sitemap}
 import graft.sources.{AvroSource, Catalog}
 
@@ -131,17 +132,16 @@ object MqReportsMain {
     Mains.need(args, 2, "parquetPath outRoot")
     val Array(parquetPath, outRoot) = args.take(2)
     Mains.run("graft: mq reports") { spark =>
-      execute(spark, parquetPath,
+      execute(spark.read.parquet(parquetPath),
         Mains.datePath(outRoot, "provider"),
         Mains.datePath(outRoot, "contributor"))
     }
   }
 
-  private[processes] def execute(spark: SparkSession, parquetPath: String,
+  private[processes] def execute(items: DataFrame,
       outProvider: String, outContributor: String): Unit = {
-    val itemdata = MqDpla.itemdata(spark.read.parquet(parquetPath))
     val (np, nc) = Processes.mqReports(
-      MqDpla.withDerived(itemdata), MqDpla.scoreCols,
+      MqDpla.withDerived(MqDpla.itemdata(items)), MqDpla.scoreCols,
       outProvider, outContributor, Mains.isoTimestamp)
     println(s"MQ reports: $np provider rows, $nc contributor rows")
   }
@@ -157,16 +157,16 @@ object SitemapMain {
     val itemUrlBase =
       if (args.length > 3) args(3) else "https://dp.la/item/"
     Mains.run("graft: sitemap") { spark =>
-      execute(spark, parquetPath, outDir, publicUrlPrefix, itemUrlBase)
+      execute(spark.read.parquet(parquetPath), outDir, publicUrlPrefix,
+        itemUrlBase)
     }
   }
 
-  private[processes] def execute(spark: SparkSession, parquetPath: String,
-      outDir: String, publicUrlPrefix: String, itemUrlBase: String): Unit = {
-    import spark.implicits._
-    val ids = spark.read.parquet(parquetPath)
-      .select(col("id")).as[String]
-    val subfiles = Sitemap.write(spark, ids, outDir, itemUrlBase,
+  private[processes] def execute(items: DataFrame, outDir: String,
+      publicUrlPrefix: String, itemUrlBase: String): Unit = {
+    import items.sparkSession.implicits._
+    val ids = items.select(col("id")).as[String]
+    val subfiles = Sitemap.write(items.sparkSession, ids, outDir, itemUrlBase,
       publicUrlPrefix, Mains.isoTimestamp)
     println(s"Sitemap: ${subfiles.size} subfiles under $outDir")
   }
@@ -228,7 +228,8 @@ object ThumbnailPurgeMain {
   * (`monthly_batch_emr.sh:41-111`): parquet → jsonl → mq → sitemap, in
   * ONE session with the month pinned before the first step.
   * Args: masterRoot outRoot publicUrlPrefix.
-  * Layout: outRoot/{parquet,jsonl,mq,sitemap}; parquet feeds mq+sitemap.
+  * Layout: outRoot/{parquet,jsonl,mq,sitemap}; parquet feeds mq+sitemap,
+  * read once with the schema the dump wrote (no schema-inference job).
   */
 object MonthlyBatchMain {
   def main(args: Array[String]): Unit = {
@@ -241,10 +242,11 @@ object MonthlyBatchMain {
       ParquetDumpMain.execute(spark, masterRoot, parquetOut)
       JsonlDumpMain.execute(spark, masterRoot,
         Mains.datePath(s"$base/jsonl", "jsonl", month))
-      MqReportsMain.execute(spark, parquetOut,
+      val items = spark.read.schema(DplaMap.exportRecord).parquet(parquetOut)
+      MqReportsMain.execute(items,
         Mains.datePath(s"$base/mq", "provider", month),
         Mains.datePath(s"$base/mq", "contributor", month))
-      SitemapMain.execute(spark, parquetOut, s"$base/sitemap",
+      SitemapMain.execute(items, s"$base/sitemap",
         publicUrlPrefix, "https://dp.la/item/")
     }
   }

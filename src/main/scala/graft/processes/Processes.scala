@@ -1,13 +1,13 @@
 package graft.processes
 
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Dataset, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.operators.{Completeness, Flatten}
 import graft.schema.{DplaMap, SchemaAlign}
 import graft.sinks._
-import graft.sources.Catalog
 
 /** The reference's seven driver programs re-expressed as composable
   * plan-builder + sink pairs (SURVEY.md §0 table; §7.1 "every pipeline =
@@ -21,16 +21,14 @@ object Processes {
 
   /** ParquetDump (ParquetDump.scala:115-126): canonical master dataset →
     * flattened export. The nested rewrite is one collapsed Project — a
-    * narrow, shuffle-free stage at any scale.
+    * narrow, shuffle-free stage at any scale. Rows are counted by an
+    * observed metric on the write: one job, where a read-back count is three.
     */
   def parquetDump(records: DataFrame, outPath: String): Long = {
-    val flattened = flattenRecord(records)
-    flattened.write.mode(SaveMode.Overwrite).parquet(outPath)
-    // count the WRITTEN parquet, not the lineage: re-executing the
-    // flatten would scan the full master dataset a second time purely
-    // for the manifest count, while the footer-count over the written
-    // files is metadata-cheap (the TrainingPipeline.run convention)
-    records.sparkSession.read.parquet(outPath).count()
+    val rows = Observation()
+    flattenRecord(records).observe(rows, count(lit(1)).as("n"))
+      .write.mode(SaveMode.Overwrite).parquet(outPath)
+    rows.get("n").asInstanceOf[Long]
   }
 
   /** The ParquetDump.modifyColumns rewrite (ParquetDump.scala:10-52) built
@@ -61,10 +59,11 @@ object Processes {
     records.select(cols: _*)
   }
 
-  /** MqReports (MqReports.scala:12-158): completeness flags once, persisted,
-    * then BOTH reports aggregate from the same flagged frame — the reference
-    * recomputes the scan+CASE projection 4× (SURVEY.md §3.2); persisting is
-    * the cost fix with identical results.
+  /** MqReports (MqReports.scala:12-158): both reports from ONE rollup, where
+    * the reference recomputes the scan and flag projection 4× (SURVEY.md
+    * §3.2). It is fetched once behind a limit, so an oversized report fails
+    * with [[CsvReport]]'s message instead of landing on the driver whole;
+    * each report, sorted by its (string) keys, reruns byte-identical.
     */
   def mqReports(
       flagged: DataFrame,
@@ -72,17 +71,23 @@ object Processes {
       outProviderDir: String,
       outContributorDir: String,
       timestamp: String): (Long, Long) = {
-    val cached = flagged.persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      val provider = Completeness.scores(cached, Seq("provider"), flagNames)
-      val contributor =
-        Completeness.scores(cached, Seq("dataProvider", "provider"), flagNames)
-      val np = CsvReport.write(provider, outProviderDir,
-        Map("Report" -> "provider"), timestamp)
-      val nc = CsvReport.write(contributor, outContributorDir,
-        Map("Report" -> "contributor"), timestamp)
-      (np, nc)
-    } finally { cached.unpersist(); () }
+    val rolled = Completeness.rollupScores(flagged, "provider", "dataProvider", flagNames)
+    // the rollup holds exactly the two reports' rows, so a fetch that
+    // reaches this limit leaves at least one of them over the bound
+    val fetched = rolled.limit(2 * CsvReport.MaxRows + 1).collect().toSeq
+    val local = flagged.sparkSession.createDataFrame(fetched.asJava, rolled.schema)
+    // the q_mq_dpla / q_mq_dpla_contrib selections, on a local frame: no job
+    val provider = Completeness.outerScores(local, "provider", flagNames)
+    val contributor = Completeness.innerScores(local, "provider", "dataProvider", flagNames)
+    val providerRows = provider.collect().toSeq.sortBy(_.getString(0))
+    val contributorRows =
+      contributor.collect().toSeq.sortBy(r => (r.getString(0), r.getString(1)))
+    // both bounds hold before either report is written
+    Seq(providerRows, contributorRows).foreach(r => CsvReport.requireFits(r.size))
+    (CsvReport.write(providerRows, provider.schema, outProviderDir,
+      Map("Report" -> "provider"), timestamp),
+     CsvReport.write(contributorRows, contributor.schema, outContributorDir,
+      Map("Report" -> "contributor"), timestamp))
   }
 
   /** SchemaRepair (SchemaRepair.scala:26-138): align to canonical. */

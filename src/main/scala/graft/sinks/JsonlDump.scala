@@ -38,8 +38,6 @@ object JsonlDump {
       providerPaths: Map[String, String],
       outRoot: String,
       timestamp: String): Result = {
-    import spark.implicits._
-
     if (providerPaths.isEmpty) {
       // a fresh/empty source root discovers zero providers — still a valid
       // (empty) dump with an auditable manifest, not a reduce() crash
@@ -105,9 +103,8 @@ object JsonlDump {
 
     Result(outRoot, counts, total)
     } finally {
-      // released on failure too (the CsvReport/Sitemap contract): a
-      // failed multi-provider dump must not leave the whole corpus
-      // pinned DISK_ONLY for the session lifetime
+      // released on failure too: a failed multi-provider dump must not
+      // leave the whole corpus pinned DISK_ONLY for the session lifetime
       perProvider.values.foreach(_.unpersist())
     }
   }

@@ -38,23 +38,20 @@ object Sitemap {
   def partitionCount(idCount: Long, maxRows: Long = MaxUrlsPerFile): Int =
     math.max(((idCount + maxRows - 1) / maxRows).toInt, 1)
 
-  /** One <url> entry (Sitemap.scala:61-71 shape: loc, lastmod, and the
-    * fixed `<changefreq>monthly</changefreq>` of Sitemap.scala:70).
+  /** Render one subfile body: per id a `<url>` (Sitemap.scala:61-71: loc,
+    * lastmod, fixed monthly changefreq), escaped as a scala.xml tree would.
     */
-  def urlXml(baseUrl: String, id: String, lastmod: String): String =
-    Utility.trim(
-      <url>
-        <loc>{s"$baseUrl$id"}</loc>
-        <lastmod>{lastmod}</lastmod>
-        <changefreq>monthly</changefreq>
-      </url>).buildString(stripComments = true)
-
-  /** Render one subfile body. */
   def buildSubfile(baseUrl: String, ids: Iterator[String], lastmod: String): String = {
     val sb = new StringBuilder
     sb.append("""<?xml version="1.0" encoding="UTF-8"?>""").append('\n')
     sb.append("""<urlset xmlns="http://www.sitemaps.org/schemas/sitemap/0.9">""")
-    ids.foreach(id => sb.append(urlXml(baseUrl, id, lastmod)))
+    val (locXml, lastmodXml) = (Utility.escape(baseUrl), Utility.escape(lastmod))
+    ids.foreach { id =>
+      sb.append("<url><loc>").append(locXml)
+      Utility.escape(id, sb)
+      sb.append("</loc><lastmod>").append(lastmodXml)
+        .append("</lastmod><changefreq>monthly</changefreq></url>")
+    }
     sb.append("</urlset>")
     sb.toString
   }
@@ -86,9 +83,11 @@ object Sitemap {
     try out.write(bytes) finally out.close()
   }
 
-  /** Full pipeline: count → repartition by id → per-partition subfile
-    * upload from executors → driver-side index + manifest. Returns subfile
-    * names.
+  /** Full pipeline: count → round-robin repartition → per-partition
+    * subfile upload from executors → driver-side index + manifest. Returns
+    * subfile names. The ids are evaluated twice, uncached, so the count
+    * only plans: each task fails before writing a subfile over
+    * [[MaxUrlsPerFile]], and the manifest `Count` sums the rows written.
     */
   def write(
       spark: SparkSession,
@@ -97,63 +96,61 @@ object Sitemap {
       baseUrl: String,
       publicUrlPrefix: String,
       timestamp: String): Seq[String] = {
-    // persist across the count + write pair (the CsvReport pattern): the
-    // ids lineage would otherwise run twice, and for a non-deterministic
-    // source the manifest Count / partition math could disagree with the
-    // rows actually written — breaking the ≤50k-per-subfile guarantee
-    // the ceil fix exists to give
-    val cached = ids.persist(
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val n = cached.count()
-      val parts = partitionCount(n)
-      val hconf = new SerializableConfiguration(
-        spark.sparkContext.hadoopConfiguration)
-      val out = outDir.stripSuffix("/")
+    val parts = partitionCount(ids.count())
+    val hconf = new SerializableConfiguration(
+      spark.sparkContext.hadoopConfiguration)
+    val out = outDir.stripSuffix("/")
 
-      // Round-robin repartition (no partition expression): partition sizes
-      // are exactly even ±1, so the ≤50k bound holds per subfile. The
-      // reference hash-partitions on id (Sitemap.scala:27), which only
-      // bounds the AVERAGE — binomial skew can push a subfile past the
-      // sitemap-protocol limit; documented deviation alongside the ceil
-      // fix above.
-      val subfiles = cached
-        .repartition(parts)
-        .rdd
-        .mapPartitionsWithIndex { (idx, iter) =>
-          if (iter.isEmpty && idx > 0) Iterator.empty
-          else {
-            val name = f"sitemap$idx%05d.xml.gz"
-            writeGzip(hconf.value, s"$out/$name",
-              buildSubfile(baseUrl, iter, timestamp))
-            Iterator.single(name)
-          }
+    // Round-robin repartition (no partition expression): partition sizes
+    // are exactly even ±1, so the ≤50k bound holds per subfile. The
+    // reference hash-partitions on id (Sitemap.scala:27), which only
+    // bounds the AVERAGE — binomial skew can push a subfile past the
+    // sitemap-protocol limit; documented deviation alongside the ceil
+    // fix above.
+    val written = ids
+      .repartition(parts)
+      .rdd
+      .mapPartitionsWithIndex { (idx, iter) =>
+        if (iter.isEmpty && idx > 0) Iterator.empty
+        else {
+          val name = f"sitemap$idx%05d.xml.gz"
+          var rows = 0L
+          val body = buildSubfile(baseUrl, iter.map { id =>
+            rows += 1
+            require(rows <= MaxUrlsPerFile, s"sitemap subfile $name would exceed " +
+              s"$MaxUrlsPerFile URLs: the ids changed between the count and the write")
+            id
+          }, timestamp)
+          writeGzip(hconf.value, s"$out/$name", body)
+          Iterator.single(name -> rows)
         }
-        .collect().toSeq.sorted
-
-      writeGzip(hconf.value, s"$out/sitemapindex.xml.gz",
-        buildIndex(subfiles.map(publicUrlPrefix + _), timestamp))
-      // a PREVIOUS larger run's surplus subfiles must go: crawlers that
-      // cached the old index (or anyone listing the prefix) would fetch
-      // stale URLs the new index no longer references, and the manifest
-      // Subfiles count would disagree with the directory. The reference
-      // cleared the prefix before writing (S3FileHelper delete); deleting
-      // the no-longer-referenced names AFTER the new index lands is the
-      // crash-safer order (at every instant every referenced file exists).
-      val outPath = new Path(out)
-      val fs = outPath.getFileSystem(hconf.value)
-      // {5,}: past 99999 subfiles the %05d format emits 6+ digits, and
-      // an exactly-5 pattern would leave those stale names behind
-      val stale = "sitemap\\d{5,}\\.xml\\.gz".r
-      if (fs.exists(outPath)) fs.listStatus(outPath).foreach { st =>
-        val name = st.getPath.getName
-        if (stale.pattern.matcher(name).matches() && !subfiles.contains(name))
-          fs.delete(st.getPath, false)
       }
-      Manifest.write(hconf.value, out,
-        Map("Count" -> n.toString, "Subfiles" -> subfiles.size.toString),
-        timestamp)
-      subfiles
-    } finally { cached.unpersist(); () }
+      .collect().toSeq.sortBy(_._1)
+    val subfiles = written.map(_._1)
+
+    writeGzip(hconf.value, s"$out/sitemapindex.xml.gz",
+      buildIndex(subfiles.map(publicUrlPrefix + _), timestamp))
+    // a PREVIOUS larger run's surplus subfiles must go: crawlers that
+    // cached the old index (or anyone listing the prefix) would fetch
+    // stale URLs the new index no longer references, and the manifest
+    // Subfiles count would disagree with the directory. The reference
+    // cleared the prefix before writing (S3FileHelper delete); deleting
+    // the no-longer-referenced names AFTER the new index lands is the
+    // crash-safer order (at every instant every referenced file exists).
+    val outPath = new Path(out)
+    val fs = outPath.getFileSystem(hconf.value)
+    // {5,}: past 99999 subfiles the %05d format emits 6+ digits, and
+    // an exactly-5 pattern would leave those stale names behind
+    val stale = "sitemap\\d{5,}\\.xml\\.gz".r
+    if (fs.exists(outPath)) fs.listStatus(outPath).foreach { st =>
+      val name = st.getPath.getName
+      if (stale.pattern.matcher(name).matches() && !subfiles.contains(name))
+        fs.delete(st.getPath, false)
+    }
+    Manifest.write(hconf.value, out,
+      Map("Count" -> written.map(_._2).sum.toString,
+        "Subfiles" -> subfiles.size.toString),
+      timestamp)
+    subfiles
   }
 }

@@ -108,4 +108,75 @@ class MqDplaSpec extends SparkSpec {
     assert(scores.length === 2) // r2 has null dataProvider
     assert(scores.map(_.getAs[String]("dataProvider")).toSet === Set("c1", "c3"))
   }
+
+  test("the rollup reports equal the per-level groupBy scores exactly, as rows and as CSV bytes") {
+    import java.nio.file.Files
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions.col
+    import graft.operators.Completeness
+    import graft.processes.Processes
+    // reference: one plain groupBy per report (the pre-rollup shape)
+    def byKey(df: DataFrame, keys: Int): Map[Seq[Any], Seq[Any]] =
+      df.collect().map(r => r.toSeq.take(keys) -> r.toSeq.drop(keys)).toMap
+    def sameScores(got: DataFrame, want: DataFrame, keys: Int): Unit = {
+      assert(got.columns.toSeq === want.columns.toSeq)
+      val (g, w) = (byKey(got, keys), byKey(want, keys))
+      assert(g.keySet === w.keySet)
+      // doubles compared with ==, not a tolerance
+      for (k <- w.keys) assert(g(k) == w(k), k)
+    }
+
+    // the DPLA flag set over the nested fixture (r2: null dataProvider)
+    val derived = MqDpla.withDerived(MqDpla.itemdata(items))
+    sameScores(MqDpla.providerScores(MqDpla.itemdata(items)),
+      Completeness.scores(derived, Seq("provider"), MqDpla.scoreCols), 1)
+    sameScores(MqDpla.contributorScores(MqDpla.itemdata(items)),
+      Completeness.scores(derived, Seq("dataProvider", "provider"),
+        MqDpla.scoreCols), 2)
+
+    // null provider, null dataProvider, a provider whose only rows have a
+    // null dataProvider, names holding a comma and a quote; means in
+    // thirds and sevenths
+    val hostile = "Hub, \"The\" One"
+    val rows = (1 to 42).map { i =>
+      val provider = i % 6 match {
+        case 0 => null
+        case 1 => "hubNoContrib"
+        case 2 => hostile
+        case _ => s"hub${i % 4}"
+      }
+      val dataProvider = if (provider == "hubNoContrib" || i % 5 == 0) null
+        else if (i % 2 == 0) "c,\"q\"" else s"c${i % 3}"
+      Row(provider, dataProvider, i % 3 % 2, if (i % 7 == 0) 1 else 0)
+    }
+    val flagged = spark.createDataFrame(spark.sparkContext.parallelize(rows, 3),
+      StructType(Seq(StructField("provider", StringType),
+        StructField("dataProvider", StringType),
+        StructField("f1", IntegerType), StructField("f2", IntegerType))))
+    val names = Seq("f1", "f2")
+    val rolled = Completeness.rollupScores(flagged, "provider", "dataProvider", names)
+    val wantP = Completeness.scores(flagged, Seq("provider"), names)
+    val wantC = Completeness.scores(flagged, Seq("dataProvider", "provider"), names)
+    sameScores(Completeness.outerScores(rolled, "provider", names), wantP, 1)
+    sameScores(Completeness.innerScores(rolled, "provider", "dataProvider", names),
+      wantC, 2)
+    assert(wantP.where(col("provider") === "hubNoContrib").count() === 1)
+    assert(wantC.where(col("provider") === "hubNoContrib").count() === 0)
+
+    // the CSV files mqReports writes hold the groupBy reports' lines
+    def tmp() = Files.createTempDirectory("graft-test").toString
+    def lines(dir: String): Seq[String] = {
+      val parts = new java.io.File(dir).listFiles().filter(_.getName.endsWith(".csv"))
+      assert(parts.length === 1, dir)
+      new String(Files.readAllBytes(parts.head.toPath), "UTF-8").linesIterator.toSeq.sorted
+    }
+    val (outP, outC) = (tmp(), tmp())
+    Processes.mqReports(flagged, names, outP, outC, "2026-10-19")
+    for ((want, got) <- Seq(wantP -> outP, wantC -> outC)) {
+      val dir = tmp()
+      want.coalesce(1).write.mode("overwrite").option("header", "true").csv(dir)
+      assert(lines(got) === lines(dir))
+    }
+    assert(lines(outP).exists(_.startsWith("\"Hub, \\\"The\\\" One\",")))
+  }
 }

@@ -115,9 +115,13 @@ class SinkSpec extends SparkSpec {
     import spark.implicits._
     val out = tmpDir()
     val ids = (1 to 100).map(i => s"id$i%04d").toDS()
-    val subfiles = Sitemap.write(spark, ids, out, "https://dp.la/item/",
-      "https://dp.la/", "2026-08-12")
+    val (subfiles, jobs, uncached) = countingJobs(Sitemap.write(spark, ids,
+      out, "https://dp.la/item/", "https://dp.la/", "2026-08-12"))
     assert(subfiles.nonEmpty)
+    // a two-job count, then the round-robin shuffle and the subfile tasks;
+    // nothing left cached
+    assert(jobs <= 4, jobs)
+    assert(uncached)
     val files = new java.io.File(out).list().toSeq
     assert(files.contains("sitemapindex.xml.gz"))
     assert(subfiles.forall(files.contains))
@@ -154,32 +158,11 @@ class SinkSpec extends SparkSpec {
       (1 to n).map(i => s"""{"$p":$i}""").toDS().coalesce(1).write.text(s"$src/$p")
     val out = tmpDir()
     val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val drained = new java.util.concurrent.CountDownLatch(1)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some("jsonl-dump") => jobs.incrementAndGet()
-          case Some("jsonl-drain") => drained.countDown()
-          case _ =>
-        }
-    }
-    sc.addSparkListener(listener)
-    val res = try {
-      sc.setJobGroup("jsonl-dump", "jsonl dump")
-      val res = try JsonlDump.dump(spark,
-        lines.map { case (p, _) => p -> s"$src/$p" }, out, "2026-10-18")
-      finally sc.clearJobGroup()
-      // listener events arrive in posting order: once this marker job's
-      // start is seen, every job of the dump has been counted
-      sc.setJobGroup("jsonl-drain", "listener drain")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
-      res
-    } finally sc.removeSparkListener(listener)
+    val (res, jobs, uncached) = countingJobs(JsonlDump.dump(spark,
+      lines.map { case (p, _) => p -> s"$src/$p" }, out, "2026-10-18"))
     // one write per provider (its count an observed metric) + the all-dump
-    assert(jobs.get === 4)
+    assert(jobs === 4)
+    assert(uncached) // the DISK_ONLY provider caches are released
     val manifest = Manifest.read(sc.hadoopConfiguration, out).linesIterator.toSet
     for ((p, n) <- lines) {
       val written = spark.read.text(s"$out/$p.jsonl").count()
@@ -213,15 +196,20 @@ class SinkSpec extends SparkSpec {
     import spark.implicits._
     val out = tmpDir()
     val df = Seq(("p1", 0.5), ("p2", 0.7)).toDF("provider", "score")
-    val n = CsvReport.write(df, out, Map("Report" -> "test"), "2026-08-12")
+    val rows = df.collect().toSeq
+    val n = CsvReport.write(rows, df.schema, out, Map("Report" -> "test"),
+      "2026-08-12")
     assert(n === 2)
     val csvs = new java.io.File(out).list().filter(_.endsWith(".csv"))
     assert(csvs.length === 1)
     val lines = spark.read.option("header", "true").csv(out).collect()
     assert(lines.length === 2)
-    intercept[IllegalArgumentException] {
-      CsvReport.write(df, out, Map.empty, "2026-08-12", maxRows = 1)
+    val e = intercept[IllegalArgumentException] {
+      CsvReport.write(rows, df.schema, out, Map.empty, "2026-08-12",
+        maxRows = 1)
     }
+    assert(e.getMessage.contains(
+      "CsvReport is a single-file sink; got 2 rows > 1."))
   }
 
   test("schema ddl dump detects the divergent provider") {
@@ -508,8 +496,12 @@ class SinkSpec extends SparkSpec {
       StructType(Seq(StructField("dplaUri", StringType))))
     val canonical = SchemaAlign.alignToSchema(rec, DplaMap.record)
     val out = tmpDir() + "/dump.parquet"
-    val n = graft.processes.Processes.parquetDump(canonical, out)
+    val (n, jobs, uncached) = countingJobs(
+      graft.processes.Processes.parquetDump(canonical, out))
     assert(n === 1)
+    // the count is an observed metric on the write: one job, nothing cached
+    assert(jobs === 1)
+    assert(uncached)
     val back = spark.read.parquet(out)
     assert(back.select("id").head().getString(0) === "zzz9")
     assert(back.select("uri").head().getString(0) === "http://dp.la/api/items/zzz9")
@@ -542,7 +534,7 @@ class SinkSpec extends SparkSpec {
     val items = spark.read.parquet(dumpDir)
     val scores = MqDpla.providerScores(MqDpla.itemdata(items))
     val outP = tmpDir()
-    assert(CsvReport.write(scores, outP,
+    assert(CsvReport.write(scores.collect().toSeq, scores.schema, outP,
       Map("Report" -> "provider"), "2026-08-12") === 2) // hubA, hubB
     val byProvider = spark.read.option("header", "true").csv(outP)
       .collect().map(r => r.getString(0) -> r.getAs[String]("title")).toMap
@@ -558,24 +550,102 @@ class SinkSpec extends SparkSpec {
       .contains("Count: 3"))
   }
 
-  test("mqReports writes both reports from one persisted flag frame") {
+  private def titleFlagged(rows: Seq[(String, String, String)]) = {
     import graft.operators.Completeness
     import graft.operators.Completeness.Flag
     import spark.implicits._
-    val docs = Seq(
-      ("hubA", "contrib1", "title here"),
-      ("hubA", "contrib2", ""),
-      ("hubB", "contrib3", "another title")).toDF("provider", "dataProvider", "title")
-    val flagged = Completeness.flagged(docs,
+    Completeness.flagged(rows.toDF("provider", "dataProvider", "title"),
       Seq(col("provider"), col("dataProvider")),
       Seq(Flag("has_title", when(length(col("title")) > 0, 1).otherwise(0))))
+  }
+
+  /** The text of the one CSV part file a report directory holds. */
+  private def csvText(dir: String): String = {
+    val parts = new java.io.File(dir).listFiles().filter(_.getName.endsWith(".csv"))
+    assert(parts.length === 1, dir)
+    new String(Files.readAllBytes(parts.head.toPath), "UTF-8")
+  }
+
+  test("mqReports writes both reports from one rollup fetch: 4 jobs, nothing cached") {
+    val flagged = titleFlagged(Seq(
+      ("hubA", "contrib1", "title here"),
+      ("hubA", "contrib2", ""),
+      ("hubB", "contrib3", "another title")))
     val (outP, outC) = (tmpDir(), tmpDir())
-    val (np, nc) = graft.processes.Processes.mqReports(
-      flagged, Seq("has_title"), outP, outC, "2026-08-12")
+    val ((np, nc), jobs, uncached) = countingJobs(
+      graft.processes.Processes.mqReports(
+        flagged, Seq("has_title"), outP, outC, "2026-08-12"))
     assert(np === 2) // hubA, hubB
     assert(nc === 3)
+    // the rollup fetch (its shuffle stage, then the limited collect), then
+    // one write per report
+    assert(jobs === 4)
+    assert(uncached)
     val prov = spark.read.option("header", "true").csv(outP)
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(prov("hubA") === "0.5")
   }
+
+  test("mqReports CSVs are byte-identical across runs over reordered input") {
+    val rows = (1 to 40).map(i =>
+      (s"hub${i % 7}", s"c${i % 11}", if (i % 3 == 0) "" else s"t$i"))
+    val runs = Seq(titleFlagged(rows), titleFlagged(rows.reverse).repartition(3))
+      .map { flagged =>
+        val (outP, outC) = (tmpDir(), tmpDir())
+        graft.processes.Processes.mqReports(
+          flagged, Seq("has_title"), outP, outC, "2026-08-12")
+        (csvText(outP), csvText(outC))
+      }
+    assert(runs(0) === runs(1))
+    // rows come out sorted by their key columns
+    val keys = runs(0)._2.linesIterator.drop(1).map(_.split(",").take(2).toSeq).toSeq
+    assert(keys === keys.sortBy(k => (k(0), k(1))))
+  }
+
+  test("sitemap fails a task before writing a subfile over 50k URLs when the ids grow after the count") {
+    import spark.implicits._
+    val out = tmpDir()
+    GrowingIds.evaluations.set(0)
+    // 10 ids when counted (one subfile planned), 50,001 when written
+    val ids = spark.range(0, 1, 1, 1).flatMap { _ =>
+      val n = if (GrowingIds.evaluations.incrementAndGet() == 1) 10
+        else Sitemap.MaxUrlsPerFile + 1
+      (0 until n).map(i => s"g$i")
+    }
+    val e = intercept[Exception](Sitemap.write(spark, ids, out,
+      "https://dp.la/item/", "https://dp.la/", "2026-08-12"))
+    assert(e.getMessage.contains(
+      s"sitemap subfile sitemap00000.xml.gz would exceed ${Sitemap.MaxUrlsPerFile} URLs"),
+      e.getMessage)
+    assert(GrowingIds.evaluations.get === 2)
+    assert(Option(new java.io.File(out).list()).forall(_.isEmpty),
+      "no subfile, index or manifest may be written")
+  }
+
+  test("sitemap subfile render is byte-equal to the scala.xml tree render") {
+    // reference: one scala.xml tree rendered per id
+    def treeUrlXml(baseUrl: String, id: String, lastmod: String): String =
+      scala.xml.Utility.trim(
+        <url>
+          <loc>{s"$baseUrl$id"}</loc>
+          <lastmod>{lastmod}</lastmod>
+          <changefreq>monthly</changefreq>
+        </url>).buildString(stripComments = true)
+    val ids = Seq("plain", "a&b", "<x>y</x>", "q\"uote", "it's", "tab\there",
+      " padded ", "line\nbreak", "non-ascii \u00fc\u00df \u65e5\u672c \ud83d\ude00",
+      "ctl\u0001char", "")
+    val base = "https://dp.la/item/?a=1&b="
+    val lastmod = "2026-08-12T00:00:00Z"
+    val want = """<?xml version="1.0" encoding="UTF-8"?>""" + "\n" +
+      """<urlset xmlns="http://www.sitemaps.org/schemas/sitemap/0.9">""" +
+      ids.map(treeUrlXml(base, _, lastmod)).mkString + "</urlset>"
+    assert(Sitemap.buildSubfile(base, ids.iterator, lastmod) === want)
+  }
+}
+
+/** A driver-side counter the sitemap guard test's source reads: local-mode
+  * tasks run in this JVM, so each evaluation of the source sees the last.
+  */
+object GrowingIds {
+  val evaluations = new java.util.concurrent.atomic.AtomicInteger()
 }

@@ -31,6 +31,39 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  /** Runs `body` on an emptied session cache and returns its result, the
+    * number of Spark jobs it started (counted by job group) and whether it
+    * left the cache empty. Other specs' cached frames are dropped first, so
+    * both answers are about `body` alone. Listener events arrive in
+    * posting order, so once a marker job in a second group is seen to
+    * start, every job of `body` has been counted.
+    */
+  def countingJobs[T](body: => T): (T, Int, Boolean) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    spark.catalog.clearCache()
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some("graft-counted") => jobs.incrementAndGet()
+          case Some("graft-drain") => drained.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("graft-counted", "counted body")
+      val res = try body finally sc.clearJobGroup()
+      sc.setJobGroup("graft-drain", "listener drain")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      (res, jobs.get, spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+        .sharedState.cacheManager.isEmpty)
+    } finally sc.removeSparkListener(listener)
+  }
+
   override def afterAll(): Unit = {
     // keep the session alive across suites; sbt's forked JVM exits at the end
     super.afterAll()
