@@ -156,7 +156,7 @@ object ConnectedComponents {
     * collect job is skipped entirely.
     */
   private def driverClosure(e: DataFrame,
-      observed: Option[Seq[Long]] = None): DataFrame = {
+      observed: Option[Seq[Long]]): DataFrame = {
     val spark = e.sparkSession
     import spark.implicits._
     val edges: Array[(Long, Long)] = observed match {

@@ -137,7 +137,7 @@ object QualityClassifier {
   /** Score a labeled frame under an ALREADY-fitted model — the
     * evaluation shape (`score`, `pred`, `y`). One narrow codegen pass;
     * the model rides the plan as a literal map, the label rides the
-    * projection, no join. Split out from [[fitScore]] so callers running
+    * projection, no join. Kept apart from [[fit]] so callers running
     * several evaluations of one gate (scores, AUC, calibration) pay the
     * fit's driver-collect loop once, not once per report.
     */
@@ -151,16 +151,6 @@ object QualityClassifier {
       .select(col(idCol), col("score"),
         when(col("score") >= 0.5, 1L).otherwise(0L).as("pred"), col("y"))
   }
-
-  /** Fit on `docs` and score the same frame (the registry shape —
-    * `q_lr_quality` oracles the WHOLE fit, the q_kmeans posture). One
-    * narrow pass for the output — the label rides the projection, no join.
-    */
-  def fitScore(docs: DataFrame, textCol: String, idCol: String,
-      label: Column, vocabSize: Int = 32, iters: Int = 2,
-      lr: Double = 0.5): DataFrame =
-    scoreLabeled(docs, textCol, idCol, label,
-      fit(docs, textCol, idCol, label, vocabSize, iters, lr))
 
   /** Calibration curve (reliability diagram) over a scored+labeled
     * frame: per score decile (or `bins`-tile), the doc count, mean
@@ -190,7 +180,7 @@ object QualityClassifier {
   }
 
   /** Classifier evaluation over a scored+labeled frame (the
-    * [[fitScore]] shape: `score`, `pred`, `y` columns): one row with
+    * [[scoreLabeled]] shape: `score`, `pred`, `y` columns): one row with
     * class counts, midrank AUC (the Mann-Whitney statistic with the
     * standard tie handling — 4-decimal scores tie often), and the
     * 0.5-threshold confusion metrics. Degenerate cases are null, not a

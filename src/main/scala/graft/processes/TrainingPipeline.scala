@@ -1,6 +1,6 @@
 package graft.processes
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Observation, classic}
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Bpe, Curation, Packing}
@@ -53,18 +53,28 @@ object TrainingPipeline {
     // persist the bins: materializeBins runs two actions over them
     // (strict-count + the join) and each would otherwise re-execute the
     // full-corpus BPE encode upstream; the bins frame is tiny (id lists
-    // + counts). Same cache-lifecycle contract as the operators.
+    // + counts)
     val bins = Packing.packGreedy(counted, idCol, "__nt", budget)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val sequences = Packing.materializeBins(bins, train, idCol, textCol)
-    val assignments = ShardWriter.writeShards(sequences, "bin_id",
-      nShards, outPath)
-    Result(
-      // count the WRITTEN shards (metadata-cheap) rather than re-running
-      // the sequence aggregation the write just materialized
-      trainBins = docs.sparkSession.read.parquet(outPath).count(),
-      trainDocs = train.count(),
-      testDocs = test.count(),
-      shardAssignments = assignments)
+    try {
+      // the sequence count rides the shard write, where a read-back is a
+      // schema-inference job plus a count; a missing key means the empty
+      // sequence frame was pruned from the plan, i.e. zero bins
+      val written = Observation()
+      val assignments = ShardWriter.writeShards(
+        Packing.materializeBins(bins, train, idCol, textCol)
+          .observe(written, count(lit(1)).as("n")),
+        "bin_id", nShards, outPath)
+      Result(
+        trainBins = written.get.getOrElse("n", 0L).asInstanceOf[Long],
+        trainDocs = train.count(),
+        testDocs = test.count(),
+        shardAssignments = assignments)
+    } finally {
+      // cascade: `unpersist` would leave the join materializeBins persists
+      docs.sparkSession.asInstanceOf[classic.SparkSession].sharedState
+        .cacheManager.uncacheQuery(bins.asInstanceOf[classic.Dataset[_]],
+          cascade = true)
+    }
   }
 }

@@ -19,8 +19,10 @@ object SchemaQueries {
   private def t(s: SparkSession, dir: String, n: String): DataFrame =
     Tables.table(s, dir, n)
 
-  /** One avro-roundtrip output path per (session, sf dir) — reused so
-    * repeated query constructions overwrite instead of leaking dirs.
+  /** One avro-roundtrip output path per sf dir, shared JVM-wide (keyed by
+    * the dir alone, so every session in the JVM writes the same path) —
+    * reused so repeated query constructions overwrite instead of leaking
+    * dirs.
     */
   private val avroRtDirs =
     scala.collection.concurrent.TrieMap.empty[String, String]
@@ -144,7 +146,7 @@ object SchemaQueries {
     // replays straight from parquet, so a value corrupted anywhere in
     // the write→read chain flips the gate. The write is an eager side
     // effect at query construction (same contract as the fit-collect
-    // queries). One output dir per (session, sf dir), reused across
+    // queries). One output dir per sf dir, JVM-wide, reused across
     // constructions — repeated bench/verify attempts overwrite in place
     // (AvroSource.write is idempotent-overwrite) instead of leaking a
     // corpus-sized temp dir per call; the "data" subpath does not

@@ -3,7 +3,7 @@ package graft.sinks
 import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 
 /** Manifest sidecar: a `_MANIFEST` key=value receipt written next to every
   * dump (reference ManifestWriter.scala:5-15; call sites

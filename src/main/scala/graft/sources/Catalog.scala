@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 
 /** Driver-side source discovery: "latest snapshot wins" per provider
   * (reference S3FileHelper.scala:20-31 — list each hub prefix, take the

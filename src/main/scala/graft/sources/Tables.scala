@@ -11,9 +11,32 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * vectorized scans, predicate pushdown, and nested-schema pruning for free.
   */
 object Tables {
-  val names: Seq[String] = Seq(
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings")
+  /** Conf a session reading a NANOS-encoded `events` must carry (set by
+    * the graft session builders — Verify, perfbench and the test
+    * harness — at construction; `table` deliberately does NOT
+    * set it, so reading one table can't silently change parquet
+    * semantics session-wide).
+    */
+  val nanosAsLongKey = "spark.sql.legacy.parquet.nanosAsLong"
+
+  /** One fixture table, kept as a temp view of the calling session named
+    * by its backquoted path (`` `<dir>/<name>` ``): `spark.read.parquet`
+    * runs a footer-inference job per call, a sweep reads the same tables
+    * hundreds of times, and a view's stored plan resolves with no job.
+    * Self-joins of two reads are deduplicated like any other self-join.
+    * The view dies with its session; `spark.newSession()` starts without
+    * it. A path holds a `/`, so it cannot collide with a managed table; view
+    * names are case-insensitive, so dirs differing only in case share one.
+    * The listing is taken once per session: a parquet file rewritten under
+    * an already-read dir is not seen again by that session.
+    */
+  def table(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"${dir.stripSuffix("/")}/$name"
+    val view = s"`${path.replace("`", "``")}`"
+    if (!spark.catalog.tableExists(view))
+      load(spark, dir, name).createOrReplaceTempView(view)
+    spark.table(view)
+  }
 
   /** Load one fixture table from a scale-factor directory.
     *
@@ -30,126 +53,6 @@ object Tables {
     *    Spark): cast to TIMESTAMP, wall-clock-preserving under the UTC
     *    session timezone every graft session pins.
     */
-  /** Conf a session reading a NANOS-encoded `events` must carry (set by
-    * the graft session builders — Verify, perfbench and the test
-    * harness — at construction; `table` deliberately does NOT
-    * set it, so reading one table can't silently change parquet
-    * semantics session-wide).
-    */
-  val nanosAsLongKey = "spark.sql.legacy.parquet.nanosAsLong"
-
-  /** Analyzed-DataFrame cache, keyed by `spark.sessionUUID` and bounded
-    * (LRU, 32 sessions). Constructing a reader is NOT free:
-    * `spark.read.parquet` lists the path and reads the footer for schema
-    * inference on every call (~0.1 s per call locally), and the
-    * 138-query sweep calls `table` several hundred times. A DataFrame is
-    * immutable and reusable across queries in its session, and
-    * self-joins of the SAME instance are resolved by Spark's
-    * DeduplicateRelations, so handing the cached frame back is
-    * semantics-neutral.
-    *
-    * Why not a WeakHashMap keyed by SparkSession (the pre-round-9
-    * shape): the cached DataFrames strongly reference their session, so
-    * the keys were never weakly reachable and stopped test-harness
-    * sessions were never released. A String key breaks that value→key
-    * edge, and the LRU bound caps the worst case (a harness that builds
-    * hundreds of sessions) at 32 sessions' worth of analyzed plans.
-    */
-  private type FrameMap = java.util.LinkedHashMap[String, DataFrame]
-
-  private val dfCache =
-    new java.util.LinkedHashMap[String, FrameMap](
-        16, 0.75f, /*accessOrder=*/ true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, FrameMap]): Boolean =
-        size() > 32
-    }
-
-  /** Per-session frame map: access-ordered LRU bounded at
-    * [[MaxFramesPerSession]] (the spanSeedCache pattern), so when a
-    * session reads more than 64 (dir, table) pairs the LEAST-RECENTLY
-    * USED analyzed plan is the one rebuilt on next use — not a
-    * hash-arbitrary victim (ADVICE r10: the old TrieMap `headOption`
-    * eviction was arbitrary AND raced concurrent callers outside any
-    * lock, thrashing hot frames). All access goes through the map's own
-    * monitor in [[table]].
-    */
-  private def newFrameMap(): FrameMap =
-    new java.util.LinkedHashMap[String, DataFrame](
-        16, 0.75f, /*accessOrder=*/ true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, DataFrame]): Boolean =
-        size() > MaxFramesPerSession
-    }
-
-  /** Minted string identity per session (Spark 4's own `sessionUUID` is
-    * private[sql]). The values here are plain Strings, so — unlike the
-    * old DataFrame-valued map — nothing reachable from a value references
-    * the key, the weak keys really are collected with their sessions, and
-    * the dfCache entry for a dead session is then unreachable by lookup
-    * and ages out of the LRU.
-    */
-  private val sessionIds = new java.util.WeakHashMap[SparkSession, String]()
-
-  private def sessionKey(spark: SparkSession): String =
-    sessionIds.synchronized {
-      var id = sessionIds.get(spark)
-      if (id == null) {
-        id = java.util.UUID.randomUUID().toString
-        sessionIds.put(spark, id)
-      }
-      id
-    }
-
-  /** Frames cached per session (ADVICE r9: a long-lived session scanning
-    * many fixture dirs would otherwise accumulate plans indefinitely).
-    * 64 covers every (dir, table) pair the harness reads several times
-    * over; past it the oldest analyzed plan is rebuilt on next use.
-    */
-  private val MaxFramesPerSession = 64
-
-  def table(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val key = sessionKey(spark)
-    val perSession = dfCache.synchronized {
-      // eviction on access (ADVICE r9): a cached frame strongly
-      // references its session, so entries for STOPPED sessions pin dead
-      // SparkContext state until 32 newer sessions displace them — drop
-      // them eagerly instead
-      val it = dfCache.values().iterator()
-      while (it.hasNext) {
-        // peek under the INNER map's monitor (ADVICE r11): concurrent
-        // `table` callers mutate these LinkedHashMaps — structurally and
-        // on get() via accessOrder — under each map's own lock, so an
-        // unsynchronized values() walk here can throw
-        // ConcurrentModificationException or read torn state
-        val m = it.next()
-        val dead = m.synchronized {
-          val vit = m.values().iterator()
-          vit.hasNext && vit.next().sparkSession.sparkContext.isStopped
-        }
-        if (dead) it.remove()
-      }
-      var m = dfCache.get(key)
-      if (m == null) {
-        m = newFrameMap()
-        dfCache.put(key, m)
-      }
-      m
-    }
-    // per-map monitor: lookup, LRU bump, bounded insert, and eviction are
-    // one atomic step, so concurrent callers can't race an eviction into
-    // reload thrash; holding it across load() only blocks callers of the
-    // SAME session, which would be footer-reading the same path anyway
-    perSession.synchronized {
-      var df = perSession.get(s"$dir/$name")
-      if (df == null) {
-        df = load(spark, dir, name)
-        perSession.put(s"$dir/$name", df)
-      }
-      df
-    }
-  }
-
   private def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"${dir.stripSuffix("/")}/$name.parquet"
     if (name == "events") {

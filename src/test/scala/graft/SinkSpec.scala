@@ -31,10 +31,13 @@ class SinkSpec extends SparkSpec {
         (43L, base * 3 + "wrong language tail here now", "de", "s1")))
       .toDF("doc_id", "text", "lang", "source")
     val out = tmpDir() + "/train"
-    val res = TrainingPipeline.run(docs, "doc_id", "text", "lang",
+    val (res, _, uncached) = countingJobs(TrainingPipeline.run(docs,
+      "doc_id", "text", "lang",
       Curation.Config(minTokens = 30, maxStopRatio = 1.0,
         langs = Seq("en"), testFraction = 0.2),
-      numMerges = 50, budget = 256, nShards = 2, outPath = out)
+      numMerges = 50, budget = 256, nShards = 2, outPath = out))
+    // the packed bins (and the join materializeBins persists) are released
+    assert(uncached)
     // 41 is an exact dup of 1 (higher id loses); 42/43 quality-gated;
     // survivors split train/test
     assert(res.trainDocs + res.testDocs === 40)
